@@ -1640,53 +1640,6 @@ def _write_partitioned_dirs(
     return out
 
 
-def _write_maintenance_output(
-    spark, df: DataFrame, path: str, manifest: dict,
-    mapping: dict | None, bloom_cols,
-) -> tuple[list, dict, dict, dict, dict, dict, dict]:
-    """Write a maintenance rewrite's output (compact/reorg packed rows)
-    preserving the table's partition layout: partitioned tables re-split
-    per partition value (DROP PARTITION and exact pruning survive the
-    maintenance op), plain tables write one directory. Returns
-    ``(dirs, stats, fstats, files, frows, blooms, partitions)`` for the
-    NEW directories only."""
-    pby = manifest.get("partition_by") or []
-    if pby:
-        # one task per partition value before the staged split, so a
-        # compaction actually REDUCES file count (n_tasks × n_partitions
-        # leaves would defeat it); partitions repack into one file each —
-        # the right unit for small-file maintenance (a partition too big
-        # for one file belongs to OPTIMIZE's size-aware rewrite)
-        written = _write_partitioned_dirs(
-            df.repartition(*[F.col(c) for c in pby]),
-            path, pby, mapping=mapping,
-        )
-    else:
-        written = []
-    if not written:
-        d0, s0, fs0, fl0, fr0 = _write_data_dir(df, path, mapping=mapping)
-        written = [(d0, s0, fs0, fl0, fr0, None)]
-    eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-    blooms: dict = {}
-    if eff_bloom_cols:
-        for d, *_ in written:
-            b = _harvest_blooms(
-                spark, os.path.join(path, d), eff_bloom_cols,
-                mapping=mapping,
-            )
-            if b:
-                blooms[d] = b
-    return (
-        [w[0] for w in written],
-        {d: s for d, s, *_ in written if s},
-        {d: fs for d, _, fs, *_ in written if fs},
-        {d: fl for d, _, _, fl, *_ in written},
-        {d: fr for d, _, _, _, fr, _ in written if fr},
-        blooms,
-        {d: pv for d, _, _, _, _, pv in written if pv is not None},
-    )
-
-
 # Type-widening lattice (Delta's typeWidening feature set, restricted
 # to what Spark's vectorized parquet reader provably upcasts at scan —
 # measured in this container: int ladder, int→double, float→double,
@@ -3845,26 +3798,33 @@ def _partition_snapshot(
     path: str, manifest: dict, touch_file, touch_name=None,
     drop_file=None, drop_dir=None,
 ) -> dict:
-    """Split a snapshot's file references into TOUCHED (must be read and
-    rewritten by a file-granular MERGE/DELETE) and KEPT (referenced
-    verbatim — stats, blooms and footer row counts carried forward — in
-    the successor manifest). ``touch_file(stats_entry, bloom_entry)``
-    decides per file; a directory WITHOUT an authoritative file list
-    (legacy manifests) is touched whole. ``touch_name(dir, fname)``,
-    when given, decides by IDENTITY instead of by stats — the
-    incremental-compaction classifier (file size is a filesystem fact,
-    not a footer stat). ``drop_file(stats_entry, num_rows)``, when
-    given, is consulted FIRST per file — called as ``drop_file(dir,
-    stats_entry, num_rows)``: True drops the file's reference outright
-    — never read, never rewritten — the metadata-only whole-file DELETE
-    path (the caller must prove every logical row matches, see
-    _file_fully_matches). ``drop_dir(dir)``, consulted before the file
-    loop, drops a WHOLE directory's references the same way — the
-    ``DROP PARTITION`` path: a partitioned dir's recorded values prove
-    every row matches, no footer evidence needed. Returns the kept
-    manifest fragments plus the touched read paths and the
-    rewrite-shape counts the audit blob records (including
-    ``files_dropped``/``rows_dropped``/``dirs_dropped``)."""
+    """Split a snapshot's file references into TOUCHED (read and
+    rewritten) and KEPT (referenced verbatim in the successor manifest,
+    stats, blooms and footer row counts carried forward). Every
+    file-granular rewrite starts here: the mutation kernel's DELETE,
+    UPDATE, MERGE and replace_where, the format writer's replaceWhere,
+    scoped OPTIMIZE, vt_compact and vt_reorg.
+
+    Per directory, in this order:
+
+    * ``drop_dir(dir)`` True drops the WHOLE directory's references —
+      the DROP PARTITION path: its recorded partition values prove every
+      row matches, so no footer evidence is needed;
+    * a directory WITHOUT an authoritative file list (legacy manifests)
+      is touched whole;
+    * otherwise per file: a footer row count of 0 drops the reference
+      (it holds nothing); ``drop_file(dir, stats_entry, num_rows)`` True
+      drops it without reading — the metadata-only whole-file DELETE
+      (the caller proves every logical row matches, see
+      _file_fully_matches); else ``touch_name(dir, fname)`` decides by
+      IDENTITY when given (the compaction and reorg classifiers: file
+      size and DV debt are not footer stats), or
+      ``touch_file(stats_entry, bloom_entry)`` by metadata.
+
+    Returns the kept manifest fragments, the touched read paths and the
+    rewrite-shape counts the audit blobs record (``files_total``,
+    ``files_rewritten``, ``files_dropped``, ``rows_dropped``,
+    ``dirs_dropped``, ``dirs_rewritten_whole``)."""
     flists = manifest.get("files", {})
     fstats = manifest.get("file_stats", {})
     blooms = manifest.get("blooms", {})
@@ -4186,77 +4146,6 @@ def _reconcile_to_schema(
     )
 
 
-def _dv_merge_attempt(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    part: dict,
-    tplan: dict,
-    target,
-    ups_c,
-    keys,
-    all_keys,
-    ups_keys,
-    del_keys,
-    txn,
-    dv_max_rows: int,
-    strict: bool,
-    bloom_cols: Sequence[str] | None = None,
-    identity: dict | None = None,
-):
-    """One merge-on-read MERGE attempt: rows whose key matches an upsert
-    (or a delete-clause row) are DV'd out of their files and the
-    reconciled upserts are appended as a fresh directory — no existing
-    file is rewritten. Change rows (pre/post images, inserts, delete-
-    clause drops) are always materialized, exactly like DV DELETE/
-    UPDATE, so CDC and the streaming source stay exact. Returns the
-    committed version, ``-1`` on a lost race, or ``None`` above the
-    position cap with ``strict=False`` (caller falls back to
-    copy-on-write)."""
-    tpos = _read_plan(spark, tplan, keep_positions=True)
-    matched = tpos.join(all_keys, keys, "semi")
-    data_cols = [F.col(f.name) for f in target.fields]
-    cur_keys = matched.select(*keys).distinct()
-    pre = (
-        matched.join(ups_keys, keys, "semi")
-        .select(*data_cols)
-        .withColumn("_change_type", F.lit("update_preimage"))
-    )
-    post = ups_c.join(cur_keys, keys, "semi").withColumn(
-        "_change_type", F.lit("update_postimage")
-    )
-    ins = ups_c.join(cur_keys, keys, "left_anti").withColumn(
-        "_change_type", F.lit("insert")
-    )
-    change_rows = pre.unionByName(post).unionByName(ins)
-    if del_keys is not None:
-        dropped = (
-            matched.join(del_keys, keys, "semi")
-            .select(*data_cols)
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        change_rows = change_rows.unionByName(dropped)
-    blob = {"files_total": part["files_total"]}
-    return _dv_mutation_commit(
-        spark,
-        path,
-        manifest,
-        expected,
-        matched,
-        "merge",
-        blob,
-        change_rows,
-        dv_max_rows,
-        strict,
-        new_data=ups_c,
-        txn=txn,
-        commit_on_empty=True,
-        bloom_cols=bloom_cols,
-        identity=identity,
-    )
-
-
 def vt_merge(
     spark,
     path: str,
@@ -4325,7 +4214,12 @@ def vt_merge(
     is no window where data landed but the marker did not. Callers
     whose ``updates`` are DERIVED from a head snapshot (streaming
     combine-then-merge) must be single-writer per app; the retry loop
-    re-checks the guard each attempt."""
+    re-checks the guard each attempt.
+
+    Pruning (here by the updates' keys), the DV-aware touched read,
+    staging and the retried commit are the mutation kernel's (contract:
+    the comment above :class:`_Region`); MERGE supplies the anti-join
+    plus union, its change rows and its ``merge`` audit blob."""
     from pyspark.sql.types import StructType
 
     if mode not in ("rewrite", "dv", "auto"):
@@ -4346,13 +4240,12 @@ def vt_merge(
         ups = updates
     # table-property CHECK constraints apply to the incoming rows (the
     # surviving current rows were validated by their own commits;
-    # deletion rows are never written). Enforced INSIDE the retry loop
-    # against each attempted head's constraint set: a racing commit can
-    # ADD or tighten constraints between the merge's read and its commit,
-    # and the merge's version is governed by the set in force at ITS
-    # head — the same window vt_write closes on retry (:884-893) and
-    # vt_update closes by enforcing in-loop (:2577). The validation
-    # action re-runs only when the set actually changed across retries.
+    # deletion rows are never written), enforced per attempt against
+    # the attempted head's constraint set: a racing commit can ADD or
+    # tighten constraints between the merge's read and its commit, and
+    # the merge's version is governed by the set in force at ITS head.
+    # The validation action re-runs only when the set actually changed
+    # across retries.
     _enforced_against: list = []
 
     def _enforce_for_head(manifest) -> None:
@@ -4439,35 +4332,52 @@ def vt_merge(
             out[icol] = spec
         return out
 
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        expected = head[-1] if head else 0
-        if txn is not None:
-            last = vt_last_txn(path, txn[0])
-            if last is not None and txn[1] <= last:
-                return expected  # replay of an already-committed txn
-        manifest = _read_manifest(path, expected) if head else None
+    def attempt(att: _Attempt):
+        manifest = att.manifest
         _enforce_for_head(manifest)
         identity_commit = _identity_commit(manifest)
-        cmap = _col_mapping(manifest)
-        file_granular = (
-            manifest is not None and manifest.get("schema") is not None
-        )
         all_keys = updates.select(*keys).distinct()
         ups_keys = (
             ups.select(*keys).distinct() if dels is not None else all_keys
         )
         del_keys = dels.select(*keys).distinct() if dels is not None else None
-        part = None
+
+        def change_rows(rows, upserts):
+            # ``rows``: the current rows of the touched files that may
+            # match — replaced ones are pre-images, their replacements
+            # post-images, unmatched upserts inserts, delete-clause
+            # matches deletes
+            cur_keys = rows.select(*keys).distinct()
+            out = (
+                rows.join(ups_keys, keys, "semi")
+                .withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(
+                    upserts.join(cur_keys, keys, "semi").withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )
+                )
+                .unionByName(
+                    upserts.join(cur_keys, keys, "left_anti").withColumn(
+                        "_change_type", F.lit("insert")
+                    )
+                )
+            )
+            if del_keys is not None:
+                out = out.unionByName(
+                    rows.join(del_keys, keys, "semi").withColumn(
+                        "_change_type", F.lit("delete")
+                    )
+                )
+            return out
+
+        part = touched = None
+        upserts = ups
         if manifest is None:
-            # initial commit: the table IS the upserts
-            touched = None
-            merged_new = ups
-            target = None
-        elif file_granular:
+            pass  # initial commit: the table IS the upserts
+        elif manifest.get("schema") is not None:
             target = StructType.fromJson(manifest["schema"])
             fresh_schema = manifest["schema"] not in _validated_schemas
-            ups_c = _reconcile_to_schema(ups, target, validate=fresh_schema)
+            upserts = _reconcile_to_schema(ups, target, validate=fresh_schema)
             if fresh_schema:
                 _validated_schemas.append(manifest["schema"])
             n_files = sum(
@@ -4479,7 +4389,7 @@ def vt_merge(
                 key_vals, key_ranges, key_rangesets = _keys_sample()
                 # file stats/blooms are PHYSICAL-keyed: classify with
                 # physical key names and physically-rekeyed samples
-                pm = {k: _phys(cmap, k) for k in keys}
+                pm = {k: _phys(att.cmap, k) for k in keys}
                 touch = _key_touch_fn(
                     [pm[k] for k in keys],
                     {pm[k]: v for k, v in key_vals.items()}
@@ -4492,229 +4402,85 @@ def vt_merge(
                     else None,
                 )
             part = _partition_snapshot(path, manifest, touch)
+            # no touched file: a provably pure insert, committed like an
+            # append
             if part["touched_paths"]:
-                tplan = {
-                    "paths": part["touched_paths"],
-                    "schema": manifest["schema"],
-                    "schema_heterogeneous": manifest.get(
-                        "schema_heterogeneous", False
-                    ),
-                }
-                if cmap:
-                    tplan["column_mapping"] = cmap
-                # honor existing deletion vectors: the rewrite must not
-                # resurrect rows a merge-on-read delete already removed
-                _attach_plan_dv(tplan, path, manifest)
-                if mode in ("dv", "auto"):
-                    res = _dv_merge_attempt(
-                        spark,
-                        path,
-                        manifest,
-                        expected,
-                        part,
-                        tplan,
-                        target,
-                        ups_c,
-                        keys,
-                        all_keys,
-                        ups_keys,
-                        del_keys,
-                        txn,
-                        dv_max_rows,
-                        strict=(mode == "dv"),
-                        bloom_cols=bloom_cols,
+                tplan = _touched_plan(path, manifest, part["touched_paths"])
+                if mode != "rewrite":
+                    matched = _read_plan(
+                        spark, tplan, keep_positions=True
+                    ).join(all_keys, keys, "semi")
+                    staged = _dv_stage(
+                        att, matched,
+                        change_rows(
+                            matched.select(
+                                *[F.col(f.name) for f in target.fields]
+                            ),
+                            upserts,
+                        ),
+                        {"files_total": part["files_total"]},
+                        dv_max_rows, mode == "dv", bloom_cols,
+                        new_data=upserts, commit_on_empty=True,
                         identity=identity_commit,
                     )
-                    if res is not None:
-                        if res >= 0:
-                            return res
-                        continue  # lost the commit race — retry
+                    if staged is not None:
+                        return staged
                     # mode="auto" over dv_max_rows: copy-on-write
                 touched = _read_plan(spark, tplan)
-                merged_new = touched.join(
-                    all_keys, keys, "left_anti"
-                ).unionByName(ups_c)
-            else:
-                # provably pure insert: no target file can hold a
-                # matching key — the merge commits like an append
-                touched = None
-                merged_new = ups_c
         else:
-            # legacy table without a recorded schema: full-snapshot
-            # rewrite (the pre-r10 path)
-            if mode == "dv":
-                raise ValueError(
-                    "mode='dv' requires a table with a recorded schema "
-                    "(legacy tables rewrite whole snapshots)"
-                )
-            target = None
-            touched = vt_read(spark, path, expected)
-            merged_new = touched.join(
-                all_keys, keys, "left_anti"
-            ).unionByName(ups)
-        change_dir = None
-        # the change-feed computation reads the touched files up to four
-        # more times (cur_keys, pre, ins via cur_keys, dropped) on top of
-        # the snapshot rewrite — persist them for the duration of the
-        # writes so the rewrite is ONE scan of the touched data, released
-        # in finally (r8 lesson: every persist gets an unconditional
-        # release path)
-        touched_cached = touched is not None and change_feed
-        if touched_cached:
-            touched.persist()
-        try:
-            if change_feed:
-                if touched is not None:
-                    cur_keys = touched.select(*keys).distinct()
-                    upserts = (
-                        _reconcile_to_schema(ups, target, validate=False)
-                        if target is not None
-                        else ups
-                    )
-                    pre = touched.join(ups_keys, keys, "semi").withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post = upserts.join(cur_keys, keys, "semi").withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    ins = upserts.join(
-                        cur_keys, keys, "left_anti"
-                    ).withColumn("_change_type", F.lit("insert"))
-                    change_rows = pre.unionByName(post).unionByName(ins)
-                    if del_keys is not None:
-                        dropped = touched.join(
-                            del_keys, keys, "semi"
-                        ).withColumn("_change_type", F.lit("delete"))
-                        change_rows = change_rows.unionByName(dropped)
-                else:
-                    upserts = (
-                        _reconcile_to_schema(ups, target, validate=False)
-                        if target is not None
-                        else ups
-                    )
-                    change_rows = upserts.withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                if touched_cached:
-                    # materialize the cache with ONE compute pass, then
-                    # run the two independent directory writes (change
-                    # rows, merged snapshot) CONCURRENTLY — they read
-                    # the cached touched files, and overlapping them
-                    # hides one write job's scheduling tail behind the
-                    # other (r15, guide §2.6). Sequentially this cost
-                    # compute+write, then cache-read+write.
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    from ..util import spark_thread_target
-
-                    touched.count()
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        f_c = pool.submit(
-                            spark_thread_target(spark, _write_data_dir),
-                            change_rows, path, "c", cmap,
-                        )
-                        f_n = pool.submit(
-                            spark_thread_target(spark, _write_data_dir),
-                            merged_new, path, "d", cmap,
-                        )
-                        change_dir = f_c.result()[0]
-                        (
-                            new_dir, new_stats, new_fstats,
-                            new_files, new_rows,
-                        ) = f_n.result()
-                else:
-                    change_dir, _, _, _, _ = _write_data_dir(
-                        change_rows, path, prefix="c", mapping=cmap
-                    )
-                    new_dir, new_stats, new_fstats, new_files, new_rows = (
-                        _write_data_dir(merged_new, path, mapping=cmap)
-                    )
-            else:
-                new_dir, new_stats, new_fstats, new_files, new_rows = (
-                    _write_data_dir(merged_new, path, mapping=cmap)
-                )
-        finally:
-            if touched_cached:
-                touched.unpersist()
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
+            touched = _legacy_snapshot(spark, att, mode)
+        merged_new = (
+            touched.join(all_keys, keys, "left_anti").unionByName(upserts)
+            if touched is not None
+            else upserts
         )
-        if part is not None:
-            dirs = part["dirs"] + [new_dir]
-            stats = {**part["stats"], **({new_dir: new_stats} if new_stats else {})}
-            fstats = {**part["file_stats"], **({new_dir: new_fstats} if new_fstats else {})}
-            files = {**part["files"], new_dir: new_files}
-            frows = {**part["file_rows"], **({new_dir: new_rows} if new_rows else {})}
-            blooms = dict(part["blooms"])
-            if new_blooms:
-                blooms[new_dir] = new_blooms
-            partial_dirs = part["partial_dirs"]
-            merge_blob = {
-                "files_total": part["files_total"],
-                "files_rewritten": part["files_rewritten"],
-            }
-            if part["dirs_rewritten_whole"]:
-                merge_blob["dirs_rewritten_whole"] = part[
-                    "dirs_rewritten_whole"
-                ]
-            if touched is None and head:
-                merge_blob["pure_insert"] = True
-            schema_json = manifest["schema"]
-            hetero = manifest.get("schema_heterogeneous", False)
+        change_dir = None
+        if not change_feed:
+            written = att.write(merged_new)
+        elif touched is None:
+            change_dir = att.write(
+                upserts.withColumn("_change_type", F.lit("insert")), "c"
+            )[0]
+            written = att.write(merged_new)
         else:
-            dirs = [new_dir]
-            stats = {new_dir: new_stats} if new_stats else {}
-            fstats = {new_dir: new_fstats} if new_fstats else None
-            files = {new_dir: new_files}
-            frows = {new_dir: new_rows} if new_rows else None
-            blooms = {new_dir: new_blooms} if new_blooms else None
-            partial_dirs = None
-            merge_blob = None
-            schema_json = json.loads(merged_new.schema.json())
-            hetero = False
-        try:
-            return _commit(
-                path,
-                dirs,
-                "merge",
-                expected,
-                stats,
-                {"app": txn[0], "version": int(txn[1])} if txn else None,
-                fstats,
-                files,
-                schema=schema_json,
-                heterogeneous=hetero,
-                changes=change_dir,
-                blooms=blooms,
-                file_rows=frows,
-                partial_dirs=partial_dirs,
-                extra={"merge": merge_blob} if merge_blob else None,
-                identity=identity_commit,
-            )
-        except TxnReplayed:
-            # a concurrent replica of this txn landed between the entry
-            # guard and our commit — exactly-once means no-op
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-            return vt_versions(path)[-1]
-        except FileExistsError:
-            # another writer won this version — discard our uncommitted
-            # directories and re-derive from the new head
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-    raise RuntimeError(f"merge at {path} lost {max_retries} commit races")
+            # the change rows read the touched files up to four more
+            # times: cache them, materialize the cache with ONE compute
+            # pass, then run the two independent directory writes
+            # CONCURRENTLY — overlapping them hides one write job's
+            # scheduling tail behind the other (guide §2.6)
+            from concurrent.futures import ThreadPoolExecutor
+
+            from ..util import spark_thread_target
+
+            touched.persist()
+            try:
+                touched.count()
+                write = spark_thread_target(spark, att.write)
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    f_c = pool.submit(
+                        write, change_rows(touched, upserts), "c"
+                    )
+                    f_n = pool.submit(write, merged_new)
+                    change_dir = f_c.result()[0]
+                    written = f_n.result()
+            finally:
+                touched.unpersist()
+        commit: dict = {"identity": identity_commit}
+        if part is not None:
+            blob = _rewrite_shape(part, manifest)
+            if touched is None:
+                blob["pure_insert"] = True
+            commit["extra"] = {"merge": blob}
+        return att.successor(
+            part, [written], bloom_cols, changes=change_dir,
+            schema=(manifest or {}).get("schema")
+            or json.loads(merged_new.schema.json()),
+            **commit,
+        )
+
+    return _mutate(
+        spark, path, "merge", attempt, max_retries, txn=txn, create=True
+    )
 
 
 def _logical_rows_dropped(part: dict, manifest: dict) -> int:
@@ -4758,304 +4524,485 @@ def _pred_touch_fn(conjuncts, bloom_types):
     return touch
 
 
-def _dv_mutation_commit(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    matched,
-    op: str,
-    blob: dict,
-    change_rows,
-    dv_max_rows: int,
-    strict: bool,
-    new_data=None,
-    txn: tuple | None = None,
-    commit_on_empty: bool = False,
-    bloom_cols: Sequence[str] | None = None,
-    identity: dict | None = None,
+# ------------------------------------------------------- mutation kernel --
+#
+# DELETE, UPDATE, MERGE and replace_where are ONE pipeline: resolve the
+# region, prune the head snapshot to the files it may touch, stage new
+# directories (in DV mode also a deletion-vector sidecar), commit the
+# successor manifest. The kernel below owns that pipeline; a verb
+# supplies only
+#
+# * its argument checks,
+# * its row transform over the TOUCHED rows — DELETE: the survivors;
+#   UPDATE: the assignments; MERGE: anti-join plus union; replace_where:
+#   the survivors plus the incoming rows — and
+# * its audit blob.
+#
+# The kernel guarantees, for every verb:
+#
+# * ONE head manifest per attempt: the region, the constraints, the
+#   touched read and the successor all derive from it, and the commit
+#   is conditional on it (:func:`_mutate`);
+# * the touched read honours that head's deletion vectors
+#   (:func:`_touched_plan`): a rewrite never resurrects, and a new
+#   vector never re-counts, a row an earlier merge-on-read commit
+#   removed;
+# * a lost commit race discards everything the attempt staged — data
+#   and change dirs, the DV sidecar — and re-derives from the new head;
+# * ``txn`` is exactly-once: a replay seen at entry, or one landing
+#   concurrently (TxnReplayed at commit), returns the current head
+#   without committing.
+#
+# The maintenance rewrites (scoped OPTIMIZE, vt_compact, vt_reorg) run
+# on the same loop, and the format writer's replaceWhere reuses the
+# pruning and successor halves.
+
+
+def _conjuncts_json(conjuncts) -> list | None:
+    """``[[col, op, value], ...]`` for an audit blob, or None when a
+    value is not JSON-safe."""
+    out = [[c, o, v] for c, o, v in conjuncts]
+    try:
+        json.dumps(out)
+    except (TypeError, ValueError):
+        return None
+    return out
+
+
+class _Region:
+    """A DML region: ``predicate=`` (skip-grammar conjuncts) or ``rule=``
+    (a compiled :class:`RuleDefinition` or raw rule dict). After
+    :meth:`resolve` against an attempt's manifest it holds ``skip`` (the
+    conjuncts that prune files), ``cond`` (the full row condition) and
+    ``proof`` (conjuncts EXACTLY equivalent to the region, which let
+    whole files and partition dirs drop metadata-only; None for a rule
+    the skip grammar cannot express)."""
+
+    def __init__(self, predicate, rule, external_params, verb: str):
+        from collections.abc import Mapping
+
+        self.rule = self.rule_doc = self.pred_json = self.exact_json = None
+        self.external_params = external_params
+        if rule is not None:
+            if predicate is not None:
+                raise ValueError("pass predicate= or rule=, not both")
+            from ..plans.model import RuleDefinition
+
+            if isinstance(rule, Mapping):
+                self.rule_doc = dict(rule)
+                rule = RuleDefinition.from_dict(rule)
+            self.rule = rule
+            try:
+                json.dumps([self.rule_doc, dict(external_params or {})])
+            except (TypeError, ValueError):
+                self.rule_doc = None  # non-JSON params: CDC needs change rows
+            return
+        conjuncts = _normalize_predicate(predicate)
+        if conjuncts is None:
+            raise ValueError(f"{verb} requires a predicate or a rule")
+        self.skip = self.proof = conjuncts
+        self.cond = None
+        for col, op, value in conjuncts:
+            c = _conjunct_column(col, op, value)
+            self.cond = c if self.cond is None else (self.cond & c)
+        self.pred_json = _conjuncts_json(conjuncts)
+
+    def resolve(self, spark, path: str, manifest: dict) -> None:
+        """Compile a rule against the manifest's schema (a predicate
+        needs no manifest). Legacy tables infer it from footers."""
+        if self.rule is None:
+            return
+        from pyspark.sql.types import StructType
+
+        from ..operators.predicates import (
+            compile_predicate,
+            rule_exact_conjuncts,
+            rule_skip_conjuncts,
+        )
+
+        if manifest.get("schema") is not None:
+            schema = StructType.fromJson(manifest["schema"])
+        else:
+            schema = spark.read.parquet(
+                os.path.join(path, manifest["dirs"][0])
+            ).schema
+        params = self.external_params
+        self.skip = rule_skip_conjuncts(self.rule, schema, params) or []
+        self.cond = compile_predicate(self.rule.conditions, schema, params)
+        # an EXACT skip-grammar rendering is recorded as a plain
+        # predicate too: the streaming change source replays the skip
+        # grammar with pyarrow but cannot evaluate the full operator set
+        self.proof = rule_exact_conjuncts(self.rule, schema, params)
+        self.exact_json = (
+            _conjuncts_json(self.proof) if self.proof is not None else None
+        )
+
+    @property
+    def recorded(self) -> list | None:
+        """The predicate the audit blob records: the region's
+        stream-replayable rendering, or None when it has none."""
+        return self.pred_json if self.rule is None else self.exact_json
+
+    def recipe(self) -> dict:
+        """Audit-blob fields the change feed replays the region from: the
+        recorded predicate and, for a JSON-safe raw rule dict, the rule
+        with its params (recompiled over the previous snapshot)."""
+        out: dict = {}
+        if self.recorded is not None:
+            out["predicate"] = self.recorded
+        if self.rule_doc is not None:
+            out["rule"] = self.rule_doc
+            out["external_params"] = dict(self.external_params or {})
+        return out
+
+
+def _region_prune(path: str, manifest: dict, skip, proof=None) -> dict:
+    """:func:`_partition_snapshot` for a predicate region: a file is
+    touched unless its stats/blooms/null counts refute the ``skip``
+    conjuncts (logical names). With ``proof`` — conjuncts exactly
+    equivalent to the region — a partition dir whose recorded values
+    prove every conjunct (DROP PARTITION), and a file whose footer
+    stats plus its dir's partition values prove every logical row
+    matches (Delta's metadata-only DELETE), drop without being read."""
+    cmap = _col_mapping(manifest)
+    touch = _pred_touch_fn(
+        _map_conjuncts(skip, cmap), _bloom_col_types(manifest)
+    )
+    if not proof:
+        return _partition_snapshot(path, manifest, touch)
+    pproof = _map_conjuncts(proof, cmap)  # stats are physical-keyed
+    pvals = manifest.get("partitions") or {}
+
+    def drop_dir(d):
+        pv = pvals.get(d)
+        return pv is not None and _partition_proves_all(pv, pproof)
+
+    def drop_file(d, entry, nrows):
+        # conjuncts the dir's partition values prove need no footer
+        # evidence: `day < X AND region = 'EU'` on a day-partitioned
+        # table drops interior EU files on region stats alone
+        pv = pvals.get(d) or {}
+        rest = [
+            c
+            for c in pproof
+            if not (c[0] in pv and _partition_proves_all(pv, [c]))
+        ]
+        return not rest or _file_fully_matches(rest, entry, nrows)
+
+    return _partition_snapshot(
+        path, manifest, touch, drop_file=drop_file,
+        drop_dir=drop_dir if pvals else None,
+    )
+
+
+def _touched_plan(path: str, manifest: dict, paths: list) -> dict:
+    """:func:`_read_plan` input for a rewrite's touched files, at the
+    manifest's logical schema and carrying its deletion vectors."""
+    plan = {
+        "paths": paths,
+        "schema": manifest["schema"],
+        "schema_heterogeneous": manifest.get("schema_heterogeneous", False),
+    }
+    cmap = _col_mapping(manifest)
+    if cmap:
+        plan["column_mapping"] = cmap
+    _attach_plan_dv(plan, path, manifest)
+    return plan
+
+
+def _rewrite_shape(part: dict, manifest: dict) -> dict:
+    """The audit blob's rewrite-shape fields for a pruned snapshot."""
+    blob = {
+        "files_total": part["files_total"],
+        "files_rewritten": part["files_rewritten"],
+    }
+    if part["files_dropped"]:
+        blob["files_dropped"] = part["files_dropped"]
+        blob["rows_dropped"] = _logical_rows_dropped(part, manifest)
+    if part["dirs_dropped"]:
+        blob["dirs_dropped"] = part["dirs_dropped"]
+    if part["dirs_rewritten_whole"]:
+        blob["dirs_rewritten_whole"] = part["dirs_rewritten_whole"]
+    return blob
+
+
+def _assemble(manifest, kept, written, blooms=None) -> dict:
+    """Successor-manifest fragments (``_commit`` keyword arguments):
+    ``kept`` — a :func:`_partition_snapshot` result, the head manifest
+    itself when nothing is rewritten, or None when the snapshot is
+    replaced — plus the ``written`` directories, each
+    ``(dir, stats, file_stats, files, file_rows[, partition values])``,
+    and their ``blooms``. Kept dirs keep their partition values."""
+    kept = kept or {}
+    dirs = list(kept.get("dirs", []))
+    stats = dict(kept.get("stats", {}))
+    fstats = dict(kept.get("file_stats", {}))
+    files = dict(kept.get("files", {}))
+    frows = dict(kept.get("file_rows", {}))
+    prev_pv = (manifest or {}).get("partitions") or {}
+    partitions = {d: prev_pv[d] for d in dirs if d in prev_pv}
+    for d, s, fs, fl, fr, *pv in written:
+        dirs.append(d)
+        files[d] = fl
+        if s:
+            stats[d] = s
+        if fs:
+            fstats[d] = fs
+        if fr:
+            frows[d] = fr
+        if pv and pv[0] is not None:
+            partitions[d] = pv[0]
+    return {
+        "dirs": dirs,
+        "stats": stats,
+        "file_stats": fstats or None,
+        "files": files,
+        "file_rows": frows or None,
+        "blooms": {**kept.get("blooms", {}), **(blooms or {})} or None,
+        "partial_dirs": kept.get("partial_dirs"),
+        "partitions": partitions or None,
+    }
+
+
+class _Attempt:
+    """One optimistic attempt at a table mutation: the head it derives
+    from (``expected``, ``manifest``) and everything it staged, so a
+    lost race can discard it."""
+
+    def __init__(self, spark, path, op, expected, manifest):
+        self.spark, self.path, self.op = spark, path, op
+        self.expected, self.manifest = expected, manifest
+        self.cmap = _col_mapping(manifest)
+        self.staged: list[str] = []
+        self.sidecar: str | None = None
+
+    def write(self, df: DataFrame, prefix: str = "d") -> tuple:
+        """:func:`_write_data_dir` under the table's column mapping."""
+        out = _write_data_dir(df, self.path, prefix=prefix, mapping=self.cmap)
+        self.staged.append(out[0])
+        return out
+
+    def write_split(self, df: DataFrame, repack: bool = False) -> list:
+        """Write ``df`` in the table's layout: one dir per partition value
+        on a partitioned table (``repack`` first gathers each value into
+        one task — maintenance output is one file per value), else one
+        dir; an empty frame still gets a dir, so the successor keeps a
+        schema-bearing one."""
+        pby = self.manifest.get("partition_by") or []
+        written: list = []
+        if pby:
+            if repack:
+                df = df.repartition(*[F.col(c) for c in pby])
+            written = _write_partitioned_dirs(
+                df, self.path, pby, mapping=self.cmap
+            )
+            self.staged.extend(w[0] for w in written)
+        return written or [self.write(df)]
+
+    def successor(self, kept, written, bloom_cols=None, **commit) -> dict:
+        """:func:`_assemble` with Bloom filters harvested for the
+        ``written`` data dirs, at the head's schema; ``commit`` adds or
+        overrides ``_commit`` arguments (changes, dv, extra, …)."""
+        cols = _effective_bloom_cols(bloom_cols, self.manifest)
+        blooms = {}
+        for w in written if cols else ():
+            b = _harvest_blooms(
+                self.spark, os.path.join(self.path, w[0]), cols,
+                mapping=self.cmap,
+            )
+            if b:
+                blooms[w[0]] = b
+        out = _assemble(self.manifest, kept, written, blooms)
+        m = self.manifest or {}
+        out["schema"] = m.get("schema")
+        out["heterogeneous"] = (
+            m.get("schema_heterogeneous", False) if kept is not None else False
+        )
+        out.update(commit)
+        return out
+
+    def discard(self) -> None:
+        for d in self.staged:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        if self.sidecar is not None:
+            try:
+                os.unlink(os.path.join(_dv_dir(self.path), self.sidecar))
+            except OSError:
+                pass
+
+
+def _mutate(
+    spark, path: str, op: str, attempt, max_retries: int,
+    txn: tuple | None = None, create: bool = False,
+) -> int:
+    """The kernel's optimistic commit loop. ``attempt(att)`` derives the
+    mutation from ``att.manifest`` (the head, None for an empty path
+    when ``create``) and returns either a version — a no-op, nothing
+    committed — or the successor's ``_commit`` arguments, which commit
+    as ``op`` conditionally on that head. A lost race discards the
+    attempt's staged files and retries against the new head."""
+    for _ in range(max_retries):
+        versions = vt_versions(path)
+        if not versions and not create:
+            raise FileNotFoundError(f"no committed versions at {path}")
+        expected = versions[-1] if versions else 0
+        if txn is not None:
+            last = vt_last_txn(path, txn[0])
+            if last is not None and txn[1] <= last:
+                return expected  # replay of an already-committed txn
+        att = _Attempt(
+            spark, path, op, expected,
+            _read_manifest(path, expected) if versions else None,
+        )
+        out = attempt(att)
+        if isinstance(out, int):
+            return out
+        try:
+            return _commit(
+                path,
+                op=op,
+                expected_head=expected,
+                txn={"app": txn[0], "version": int(txn[1])} if txn else None,
+                **out,
+            )
+        except FileExistsError:
+            att.discard()  # another writer won: re-derive from its head
+        except TxnReplayed:
+            att.discard()
+            return vt_versions(path)[-1]
+    raise RuntimeError(f"{op} at {path} lost {max_retries} commit races")
+
+
+def _legacy_snapshot(spark, att: _Attempt, mode: str) -> DataFrame:
+    """The whole snapshot of a table without a recorded schema — no file
+    lists or stats to prune with, so a mutation rewrites all of it."""
+    if mode == "dv":
+        raise ValueError(
+            "mode='dv' requires a table with a recorded schema "
+            "(legacy tables rewrite whole snapshots)"
+        )
+    return vt_read(spark, att.path, att.expected)
+
+
+def _rewrite(att: _Attempt, touched, data, changes=None, cache=False):
+    """Write a rewrite's change rows (when given) then its data rows,
+    both derived from ``touched``; ``cache`` keeps the touched rows for
+    the two writes (one scan). Returns ``(change_dir, written)``."""
+    if cache:
+        touched.persist()
+    try:
+        change_dir = att.write(changes, "c")[0] if changes is not None else None
+        return change_dir, att.write(data)
+    finally:
+        if cache:
+            touched.unpersist()
+
+
+def _dv_stage(
+    att: _Attempt, matched, change_rows, blob: dict, dv_max_rows: int,
+    strict: bool, bloom_cols=None, new_data=None,
+    commit_on_empty: bool = False, **commit,
 ):
-    """Shared merge-on-read commit for DV-mode DELETE/UPDATE: collect the
-    matched rows' (file key, position) pairs — bounded by ``dv_max_rows``
-    — union them into the head's deletion vectors, materialize
-    ``change_rows`` as the commit's change directory, and commit with
-    every data file referenced VERBATIM (``files_rewritten = 0``).
-    ``new_data`` (UPDATE's post-image rows) is appended as a fresh
-    directory. Returns the committed version, ``-1`` on a lost commit
-    race (caller retries against the new head), or ``None`` when more
-    rows matched than ``dv_max_rows`` and ``strict`` is False (caller
-    falls back to copy-on-write)."""
-    # matched feeds the position collect, the change rows, and (UPDATE)
-    # the appended post-image rows — one scan of the touched files
+    """The merge-on-read half of the kernel (``mode="dv"``/``"auto"``):
+    collect the ``matched`` rows' (file key, position) pairs — bounded
+    by ``dv_max_rows`` — and union them into the head's deletion vectors
+    in a new sidecar; write ``change_rows`` as the commit's change dir
+    and ``new_data`` (UPDATE's post-images, MERGE's upserts) as a fresh
+    data dir. Every existing file stays referenced verbatim
+    (``files_rewritten = 0``). Returns the successor's commit arguments,
+    the head version when nothing matched (no-op, unless
+    ``commit_on_empty``), or None above the cap when not ``strict`` —
+    the caller rewrites instead."""
+    path, manifest = att.path, att.manifest
+    # matched feeds the position collect, the change rows and the
+    # post-images — one scan of the touched files
     matched.persist()
     try:
-        return _dv_mutation_commit_cached(
-            spark,
-            path,
-            manifest,
-            expected,
-            matched,
-            op,
-            blob,
-            change_rows,
-            dv_max_rows,
-            strict,
-            new_data,
-            txn,
-            commit_on_empty,
-            bloom_cols,
-            identity,
+        pairs = (
+            matched.select("_vt_file_key", "_vt_pos")
+            .limit(dv_max_rows + 1)
+            .collect()
+        )
+        if len(pairs) > dv_max_rows:
+            if strict:
+                raise ValueError(
+                    f"mode='dv': more than dv_max_rows={dv_max_rows} rows "
+                    "match — a delete this large should rewrite files "
+                    "(mode='rewrite' or 'auto')"
+                )
+            return None
+        if not pairs and not commit_on_empty:
+            return att.expected  # nothing matched — no-op
+        # map join keys (basename(dir)/file) back to manifest dir entries
+        base_of = {
+            os.path.basename(d.rstrip("/")): d for d in manifest["dirs"]
+        }
+        new_pos: dict[tuple, set] = {}
+        for r in pairs:
+            dbase, _, fname = r["_vt_file_key"].partition("/")
+            new_pos.setdefault((base_of[dbase], fname), set()).add(
+                int(r["_vt_pos"])
+            )
+        head_dv = manifest.get("dv") or {}
+        live_refs = {
+            e["ref"] for fmap in head_dv.values() for e in fmap.values()
+        }
+        # fan-out bound: once the head references _DV_CONSOLIDATE_REFS
+        # sidecars, this commit's (mandatory anyway) sidecar absorbs
+        # EVERY live entry, collapsing the refs back to 1 — scan planning
+        # opens O(1) sidecars no matter how many DV commits accumulated
+        consolidate = len(live_refs) >= _DV_CONSOLIDATE_REFS
+        if consolidate:
+            prior = _load_dv_positions(path, head_dv)
+        else:
+            prior_subset: dict = {}
+            for d, fname in new_pos:
+                entry = head_dv.get(d, {}).get(fname)
+                if entry is not None:
+                    prior_subset.setdefault(d, {})[fname] = entry
+            prior = _load_dv_positions(path, prior_subset)
+        payload: dict = {}
+        if consolidate:
+            for d, fmap in head_dv.items():
+                for fname in fmap:
+                    key = os.path.basename(d.rstrip("/")) + "/" + fname
+                    payload.setdefault(d, {})[fname] = prior.get(key, [])
+        for (d, fname), poss in new_pos.items():
+            key = os.path.basename(d.rstrip("/")) + "/" + fname
+            merged = sorted(set(prior.get(key, [])) | poss)
+            payload.setdefault(d, {})[fname] = merged
+        ref = _write_dv_sidecar(path, payload) if payload else None
+        att.sidecar = ref
+        if consolidate and ref is not None:
+            dv_map = {
+                d: {
+                    fname: {"ref": ref, "count": len(poss)}
+                    for fname, poss in fmap.items()
+                }
+                for d, fmap in payload.items()
+            }
+        else:
+            dv_map = {d: dict(fmap) for d, fmap in head_dv.items()}
+            for d, fmap in payload.items():
+                for fname, poss in fmap.items():
+                    dv_map.setdefault(d, {})[fname] = {
+                        "ref": ref,
+                        "count": len(poss),
+                    }
+        blob = dict(
+            blob, dv=True, files_rewritten=0, files_dv=len(new_pos),
+            rows_matched=len(pairs),
+        )
+        if consolidate:
+            blob["dv_consolidated_refs"] = len(live_refs)
+        change_dir = att.write(change_rows, "c")[0]
+        written = [att.write(new_data)] if new_data is not None else []
+        return att.successor(
+            manifest, written, bloom_cols, changes=change_dir,
+            extra={att.op: blob}, dv=dv_map, **commit,
         )
     finally:
         matched.unpersist()
-
-
-def _dv_mutation_commit_cached(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    matched,
-    op: str,
-    blob: dict,
-    change_rows,
-    dv_max_rows: int,
-    strict: bool,
-    new_data,
-    txn: tuple | None = None,
-    commit_on_empty: bool = False,
-    bloom_cols: Sequence[str] | None = None,
-    identity: dict | None = None,
-):
-    pairs = (
-        matched.select("_vt_file_key", "_vt_pos")
-        .limit(dv_max_rows + 1)
-        .collect()
-    )
-    if len(pairs) > dv_max_rows:
-        if strict:
-            raise ValueError(
-                f"mode='dv': more than dv_max_rows={dv_max_rows} rows "
-                "match — a delete this large should rewrite files "
-                "(mode='rewrite' or 'auto')"
-            )
-        return None
-    if not pairs and not commit_on_empty:
-        return expected  # nothing matched — no-op, nothing committed
-    # map join keys (basename(dir)/file) back to manifest dir entries
-    base_of = {
-        os.path.basename(d.rstrip("/")): d for d in manifest["dirs"]
-    }
-    new_pos: dict[tuple, set] = {}
-    for r in pairs:
-        dbase, _, fname = r["_vt_file_key"].partition("/")
-        new_pos.setdefault((base_of[dbase], fname), set()).add(
-            int(r["_vt_pos"])
-        )
-    head_dv = manifest.get("dv") or {}
-    live_refs = {
-        e["ref"] for fmap in head_dv.values() for e in fmap.values()
-    }
-    # fan-out bound: once the head references _DV_CONSOLIDATE_REFS
-    # sidecars, this commit's (mandatory anyway) sidecar absorbs EVERY
-    # live entry, collapsing the refs back to 1 — scan planning opens
-    # O(1) sidecars no matter how many DV commits accumulated
-    consolidate = len(live_refs) >= _DV_CONSOLIDATE_REFS
-    if consolidate:
-        prior = _load_dv_positions(path, head_dv)
-    else:
-        prior_subset: dict = {}
-        for d, fname in new_pos:
-            entry = head_dv.get(d, {}).get(fname)
-            if entry is not None:
-                prior_subset.setdefault(d, {})[fname] = entry
-        prior = _load_dv_positions(path, prior_subset)
-    payload: dict = {}
-    if consolidate:
-        for d, fmap in head_dv.items():
-            for fname in fmap:
-                key = os.path.basename(d.rstrip("/")) + "/" + fname
-                payload.setdefault(d, {})[fname] = prior.get(key, [])
-    for (d, fname), poss in new_pos.items():
-        key = os.path.basename(d.rstrip("/")) + "/" + fname
-        merged = sorted(set(prior.get(key, [])) | poss)
-        payload.setdefault(d, {})[fname] = merged
-    ref = _write_dv_sidecar(path, payload) if payload else None
-    if consolidate and ref is not None:
-        dv_map = {
-            d: {
-                fname: {"ref": ref, "count": len(poss)}
-                for fname, poss in fmap.items()
-            }
-            for d, fmap in payload.items()
-        }
-    else:
-        dv_map = {d: dict(fmap) for d, fmap in head_dv.items()}
-        for d, fmap in payload.items():
-            for fname, poss in fmap.items():
-                dv_map.setdefault(d, {})[fname] = {
-                    "ref": ref,
-                    "count": len(poss),
-                }
-    blob = dict(blob)
-    blob.update(
-        dv=True,
-        files_rewritten=0,
-        files_dv=len(new_pos),
-        rows_matched=len(pairs),
-    )
-    if consolidate:
-        blob["dv_consolidated_refs"] = len(live_refs)
-    cmap = _col_mapping(manifest)
-    change_dir, _, _, _, _ = _write_data_dir(
-        change_rows, path, prefix="c", mapping=cmap
-    )
-    dirs = list(manifest["dirs"])
-    files = dict(manifest.get("files", {}))
-    stats = dict(manifest.get("stats", {}))
-    fstats = dict(manifest.get("file_stats", {}))
-    blooms = dict(manifest.get("blooms", {}))
-    frows = dict(manifest.get("file_rows", {}))
-    new_dir = None
-    if new_data is not None:
-        new_dir, nstats, nfstats, nfiles, nrows = _write_data_dir(
-            new_data, path, mapping=cmap
-        )
-        dirs.append(new_dir)
-        files[new_dir] = nfiles
-        if nstats:
-            stats[new_dir] = nstats
-        if nfstats:
-            fstats[new_dir] = nfstats
-        if nrows:
-            frows[new_dir] = nrows
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        if eff_bloom_cols:
-            # the appended upsert dir must stay bloom-prunable like any
-            # rewrite-path output, or alternating DV merges would
-            # progressively lose the pruning the caller asked for
-            nblooms = _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if nblooms:
-                blooms[new_dir] = nblooms
-    try:
-        return _commit(
-            path,
-            dirs,
-            op,
-            expected,
-            stats,
-            {"app": txn[0], "version": int(txn[1])} if txn else None,
-            fstats or None,
-            files,
-            schema=manifest["schema"],
-            heterogeneous=manifest.get("schema_heterogeneous", False),
-            changes=change_dir,
-            blooms=blooms or None,
-            file_rows=frows or None,
-            partial_dirs=manifest.get("partial_dirs"),
-            extra={op: blob},
-            dv=dv_map,
-            identity=identity,
-        )
-    except (FileExistsError, TxnReplayed) as e:
-        # lost the race: discard everything this attempt staged
-        shutil.rmtree(os.path.join(path, change_dir), ignore_errors=True)
-        if new_dir is not None:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-        if ref is not None:
-            try:
-                os.unlink(os.path.join(_dv_dir(path), ref))
-            except OSError:
-                pass
-        if isinstance(e, TxnReplayed):
-            # a concurrent replica of this txn landed — exactly-once
-            # means no-op at the CURRENT head
-            return vt_versions(path)[-1]
-        return -1
-
-
-def _dv_update_attempt(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    tplan: dict,
-    matched_expr,
-    assignments: dict,
-    part: dict,
-    pred_json,
-    rule_doc,
-    external_params,
-    assigns_json,
-    dv_max_rows: int,
-    strict: bool,
-    bloom_cols: Sequence[str] | None = None,
-):
-    """One merge-on-read UPDATE attempt: DV out the matched rows'
-    positions, append the post-image rows as a fresh directory, always
-    materialize pre/post change images. Return contract matches
-    :func:`_dv_mutation_commit`."""
-    from pyspark.sql.types import StructType
-
-    target = StructType.fromJson(manifest["schema"])
-    names = {f.name for f in target.fields}
-    for c in assignments:
-        if c not in names:
-            raise ValueError(f"assignment to unknown column {c!r}")
-    exprs = {
-        c: (F.expr(e) if isinstance(e, str) else e)
-        for c, e in assignments.items()
-    }
-    m = _read_plan(spark, tplan, keep_positions=True).filter(matched_expr)
-    # simultaneous assignment against the PRE-update row, cast back to
-    # the declared type (same semantics as the rewrite path)
-    post = m.select(
-        *[
-            exprs[f.name].cast(f.dataType).alias(f.name)
-            if f.name in exprs
-            else F.col(f.name)
-            for f in target.fields
-        ]
-    )
-    _enforce_constraints(
-        post, manifest.get("constraints") or [], recorded=True
-    )
-    if manifest.get("generated"):
-        _validate_generated(
-            post, manifest["generated"], set(post.columns)
-        )
-    pre = m.select(*[F.col(f.name) for f in target.fields]).withColumn(
-        "_change_type", F.lit("update_preimage")
-    )
-    change_rows = pre.unionByName(
-        post.withColumn("_change_type", F.lit("update_postimage"))
-    )
-    blob: dict = {"files_total": part["files_total"]}
-    if assigns_json is not None:
-        if pred_json is not None:
-            blob["predicate"] = pred_json
-            blob["assignments"] = assigns_json
-        elif rule_doc is not None:
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
-            blob["assignments"] = assigns_json
-    return _dv_mutation_commit(
-        spark,
-        path,
-        manifest,
-        expected,
-        m,
-        "update",
-        blob,
-        change_rows,
-        dv_max_rows,
-        strict,
-        bloom_cols=bloom_cols,
-        new_data=post,
-    )
 
 
 def vt_delete(
@@ -5146,396 +5093,101 @@ def vt_delete(
     bloom-indexed table doesn't silently degrade equality pruning until
     the next OPTIMIZE.
 
-    Concurrency: like OPTIMIZE, a delete is derived from the head it
-    read; on a commit race it re-reads the new head and retries."""
-    from collections.abc import Mapping as _Mapping
-
+    Pruning, the DV-aware touched read, staging and the retried commit
+    are the mutation kernel's (contract: the comment above
+    :class:`_Region`); DELETE supplies the survivors and its ``delete``
+    audit blob."""
     if mode not in ("rewrite", "dv", "auto"):
         raise ValueError(f"unknown delete mode {mode!r}")
+    region = _Region(predicate, rule, external_params, "vt_delete")
 
-    rule_doc = None
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..plans.model import RuleDefinition
-
-        if isinstance(rule, _Mapping):
-            rule_doc = dict(rule)
-            rule = RuleDefinition.from_dict(rule)
-        conjuncts = None
-        cond = None
-        pred_json = None
-        try:
-            json.dumps([rule_doc, dict(external_params or {})])
-        except (TypeError, ValueError):
-            rule_doc = None  # non-JSON params: CDC needs change_feed
-    else:
-        conjuncts = _normalize_predicate(predicate)
-        if conjuncts is None:
-            raise ValueError("vt_delete requires a predicate or a rule")
-        cond = None
-        for col, op, value in conjuncts:
-            c = _conjunct_column(col, op, value)
-            cond = c if cond is None else (cond & c)
-        try:
-            json.dumps([[c, o, v] for c, o, v in conjuncts])
-            pred_json: list | None = [[c, o, v] for c, o, v in conjuncts]
-        except (TypeError, ValueError):
-            pred_json = None  # non-JSON values: CDC needs change_feed=True
-
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
-        rule_pred_json = None
-        if rule is not None:
-            from pyspark.sql.types import StructType
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_exact_conjuncts,
-                rule_skip_conjuncts,
-            )
-
-            if manifest.get("schema") is not None:
-                schema_st = StructType.fromJson(manifest["schema"])
-            else:
-                schema_st = spark.read.parquet(
-                    os.path.join(path, manifest["dirs"][0])
-                ).schema
-            loop_conjuncts = (
-                rule_skip_conjuncts(rule, schema_st, external_params) or []
-            )
-            cond = compile_predicate(
-                rule.conditions, schema_st, external_params
-            )
-            # when the rule is EXACTLY a skip-grammar conjunction,
-            # record it as a plain predicate too: the streaming change
-            # source replays the skip grammar with pyarrow but cannot
-            # evaluate the full operator set — this closes the
-            # batch-vs-stream replay asymmetry for simple rules
-            exact = rule_exact_conjuncts(rule, schema_st, external_params)
-            if exact is not None:
-                try:
-                    json.dumps([[c, o, v] for c, o, v in exact])
-                    rule_pred_json = [[c, o, v] for c, o, v in exact]
-                except (TypeError, ValueError):
-                    rule_pred_json = None
-        else:
-            loop_conjuncts = conjuncts
+    def attempt(att: _Attempt):
+        manifest = att.manifest
+        region.resolve(spark, path, manifest)
         # a rule the skip grammar cannot express exactly is not
         # stream-replayable from metadata: materialize the deleted rows
         # at delete time so the streaming source never has to refuse
         need_changes = change_feed or (
-            rule is not None and rule_pred_json is None
+            region.rule is not None and region.exact_json is None
         )
-        cmap = _col_mapping(manifest)
-        # file stats/blooms are physical-keyed on mapped tables; the
-        # recorded pred_json and the row-level filter stay LOGICAL
-        pconj = _map_conjuncts(loop_conjuncts, cmap)
-        touch = _pred_touch_fn(pconj, _bloom_col_types(manifest))
+        cond = F.coalesce(region.cond, F.lit(False))
         if manifest.get("schema") is None:
-            if mode == "dv":
-                raise ValueError(
-                    "mode='dv' requires a table with a recorded schema "
-                    "(legacy tables rewrite whole snapshots)"
-                )
-            # legacy table without schema metadata: whole-snapshot rewrite
-            part = None
-            touched = vt_read(spark, path, expected)
-            schema_json = None
+            part, touched = None, _legacy_snapshot(spark, att, mode)
         else:
-            dropper = None
-            dir_dropper = None
-            if mode == "rewrite" and not need_changes and loop_conjuncts:
-                # whole-file fast path (Delta's metadata-only DELETE):
-                # a file whose stats PROVE every logical row matches is
-                # dropped from the successor manifest without being
-                # read. Only safe when no change rows are needed (the
-                # predicate is recorded for streaming replay) and no DV
-                # probe wants the matched rows (dv/auto read them).
-                _lc = pconj  # stats proof probes physical-keyed footers
-                _pvals = manifest.get("partitions") or {}
-                if _pvals:
-                    # DROP PARTITION: when EVERY conjunct is on a
-                    # partition column and the dir's exact values
-                    # satisfy all of them, the whole directory drops
-                    # metadata-only — no footer stats consulted
-                    def dir_dropper(d, _pv=_pvals, _c=_lc):
-                        pv = _pv.get(d)
-                        return pv is not None and _partition_proves_all(
-                            pv, _c
-                        )
-
-                def dropper(d, entry, nrows, _c=_lc, _pv=_pvals):
-                    lc = _c
-                    pv = _pv.get(d)
-                    if pv:
-                        # conjuncts the dir's partition values prove
-                        # TRUE for every row need no footer evidence —
-                        # `day < X AND region = 'EU'` on a day-
-                        # partitioned table drops interior EU files on
-                        # region stats alone
-                        lc = [
-                            c
-                            for c in lc
-                            if not (
-                                c[0] in pv
-                                and _partition_proves_all(pv, [c])
-                            )
-                        ]
-                        if not lc:
-                            return True  # all conjuncts partition-proven
-                    return _file_fully_matches(lc, entry, nrows)
-
-            part = _partition_snapshot(
-                path, manifest, touch, drop_file=dropper,
-                drop_dir=dir_dropper,
+            # whole-file drops need no change rows and no DV probe (the
+            # dv/auto modes read the matched rows)
+            part = _region_prune(
+                path, manifest, region.skip,
+                region.proof if mode == "rewrite" and not need_changes
+                else None,
             )
             if not part["touched_paths"]:
-                if part["files_dropped"] and part["dirs"]:
-                    if _logical_rows_dropped(part, manifest) == 0:
-                        # every dropped file's rows were already hidden
-                        # by deletion vectors: logically nothing is
-                        # deleted — honor the "a no-op delete commits
-                        # nothing" contract (reclaiming fully-DV'd
-                        # files is vt_reorg/vt_optimize's job)
-                        return expected
-                    # EVERY affected file provably fully matches: pure
-                    # metadata delete — zero bytes read or written
-                    blob = {
-                        "files_total": part["files_total"],
-                        "files_rewritten": 0,
-                        "files_dropped": part["files_dropped"],
-                        "rows_dropped": _logical_rows_dropped(
-                            part, manifest
-                        ),
-                    }
-                    if part["dirs_dropped"]:
-                        blob["dirs_dropped"] = part["dirs_dropped"]
-                    if pred_json is not None:
-                        blob["predicate"] = pred_json
-                    elif rule_pred_json is not None:
-                        blob["predicate"] = rule_pred_json
-                    if rule_doc is not None:
-                        blob["rule"] = rule_doc
-                        blob["external_params"] = dict(
-                            external_params or {}
-                        )
-                    try:
-                        return _commit(
-                            path,
-                            part["dirs"],
-                            "delete",
-                            expected,
-                            part["stats"],
-                            None,
-                            part["file_stats"] or None,
-                            part["files"],
-                            schema=manifest["schema"],
-                            heterogeneous=manifest.get(
-                                "schema_heterogeneous", False
-                            ),
-                            blooms=part["blooms"] or None,
-                            file_rows=part["file_rows"] or None,
-                            partial_dirs=part["partial_dirs"],
-                            extra={"delete": blob},
-                        )
-                    except FileExistsError:
-                        continue  # lost the race — retry on new head
-                elif part["files_dropped"]:
-                    # dropping EVERYTHING the table holds: fall back to
-                    # the rewrite walk so the successor keeps a
-                    # schema-bearing (empty) data dir — an empty
-                    # manifest has nothing for readers to infer from
-                    part = _partition_snapshot(path, manifest, touch)
+                if not part["files_dropped"]:
+                    return att.expected  # provably nothing to delete
+                if not part["dirs"]:
+                    # dropping EVERYTHING: rewrite instead, so the
+                    # successor keeps a schema-bearing (empty) dir
+                    part = _region_prune(path, manifest, region.skip)
+                elif _logical_rows_dropped(part, manifest) == 0:
+                    # the dropped files' rows were all DV-hidden already:
+                    # logically nothing is deleted (reclaiming them is
+                    # vt_reorg/vt_optimize's job)
+                    return att.expected
                 else:
-                    return expected  # provably nothing to delete
-            tplan = {
-                "paths": part["touched_paths"],
-                "schema": manifest["schema"],
-                "schema_heterogeneous": manifest.get(
-                    "schema_heterogeneous", False
-                ),
-            }
-            if cmap:
-                tplan["column_mapping"] = cmap
-            # the touched read must honor EXISTING deletion vectors, or
-            # a rewrite would resurrect (and a new DV would re-count)
-            # rows an earlier merge-on-read delete already removed
-            _attach_plan_dv(tplan, path, manifest)
-            if mode in ("dv", "auto"):
+                    # pure metadata delete — zero bytes read or written
+                    return att.successor(part, [], extra={"delete": {
+                        **_rewrite_shape(part, manifest), **region.recipe()
+                    }})
+            tplan = _touched_plan(path, manifest, part["touched_paths"])
+            if mode != "rewrite":
                 matched = _read_plan(
                     spark, tplan, keep_positions=True
-                ).filter(F.coalesce(cond, F.lit(False)))
-                blob = {"files_total": part["files_total"]}
-                if pred_json is not None:
-                    blob["predicate"] = pred_json
-                elif rule_pred_json is not None:
-                    # exact skip-grammar rendering of the rule — makes
-                    # the commit stream-replayable from metadata alone
-                    blob["predicate"] = rule_pred_json
-                if rule_doc is not None:
-                    blob["rule"] = rule_doc
-                    blob["external_params"] = dict(external_params or {})
-                res = _dv_mutation_commit(
-                    spark,
-                    path,
-                    manifest,
-                    expected,
-                    matched,
-                    "delete",
-                    blob,
+                ).filter(cond)
+                staged = _dv_stage(
+                    att, matched,
                     matched.drop("_vt_file_key", "_vt_pos").withColumn(
                         "_change_type", F.lit("delete")
                     ),
-                    dv_max_rows,
-                    strict=(mode == "dv"),
-                    bloom_cols=bloom_cols,
+                    {"files_total": part["files_total"], **region.recipe()},
+                    dv_max_rows, mode == "dv", bloom_cols,
                 )
-                if res is not None:
-                    if res >= 0:
-                        return res
-                    continue  # lost the commit race — retry on new head
+                if staged is not None:
+                    return staged
                 # mode="auto" over dv_max_rows: copy-on-write this attempt
             touched = _read_plan(spark, tplan)
-            schema_json = manifest["schema"]
+            # stats/blooms describe PHYSICAL rows, so a predicate matching
+            # only DV-hidden rows still touches files: one limit-1 probe
+            # finds the logically empty delete (unless whole-file drops
+            # already removed real rows)
             if (
                 manifest.get("dv")
                 and _logical_rows_dropped(part, manifest) == 0
+                and touched.filter(cond).limit(1).count() == 0
             ):
-                # stats/blooms describe PHYSICAL rows, so a predicate
-                # matching only rows a deletion vector already hides
-                # classifies files as touched — detect the logically
-                # empty delete with one limit-1 probe and no-op instead
-                # of committing a byte-identical rewrite (found by the
-                # r13 partition-op extension of the history model).
-                # Only when the whole-file drops are ALSO logically
-                # empty (a drop with real rows IS the delete).
-                if (
-                    touched.filter(F.coalesce(cond, F.lit(False)))
-                    .limit(1)
-                    .count()
-                    == 0
-                ):
-                    return expected
-        survivors = touched.filter(~F.coalesce(cond, F.lit(False)))
-        change_dir = None
-        if need_changes:
-            # two consumers of the touched files (deleted + survivors):
-            # persist for the duration of the writes, release in finally
-            touched.persist()
-        try:
-            if need_changes:
-                deleted = touched.filter(cond).withColumn(
-                    "_change_type", F.lit("delete")
-                )
-                change_dir, _, _, _, _ = _write_data_dir(
-                    deleted, path, prefix="c", mapping=cmap
-                )
-            new_dir, new_stats, new_fstats, new_files, new_rows = (
-                _write_data_dir(survivors, path, mapping=cmap)
+                return att.expected
+        survivors = touched.filter(~cond)
+        deleted = (
+            touched.filter(region.cond).withColumn(
+                "_change_type", F.lit("delete")
             )
-        finally:
-            if need_changes:
-                touched.unpersist()
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
+            if need_changes
+            else None
         )
-        if part is not None:
-            dirs = part["dirs"] + [new_dir]
-            stats = {
-                **part["stats"],
-                **({new_dir: new_stats} if new_stats else {}),
-            }
-            fstats = {
-                **part["file_stats"],
-                **({new_dir: new_fstats} if new_fstats else {}),
-            }
-            files = {**part["files"], new_dir: new_files}
-            frows = {
-                **part["file_rows"],
-                **({new_dir: new_rows} if new_rows else {}),
-            }
-            blooms = dict(part["blooms"])
-            if new_blooms:
-                blooms[new_dir] = new_blooms
-            blooms = blooms or None
-            partial_dirs = part["partial_dirs"]
-            blob = {
-                "files_total": part["files_total"],
-                "files_rewritten": part["files_rewritten"],
-            }
-            if part["files_dropped"]:
-                # boundary files rewritten, interior files dropped
-                # metadata-only (see the whole-file fast path above)
-                blob["files_dropped"] = part["files_dropped"]
-                blob["rows_dropped"] = _logical_rows_dropped(
-                    part, manifest
-                )
-            if part["dirs_dropped"]:
-                blob["dirs_dropped"] = part["dirs_dropped"]
-            if part["dirs_rewritten_whole"]:
-                blob["dirs_rewritten_whole"] = part["dirs_rewritten_whole"]
-            hetero = manifest.get("schema_heterogeneous", False)
-        else:
-            dirs = [new_dir]
-            stats = {new_dir: new_stats} if new_stats else {}
-            fstats = {new_dir: new_fstats} if new_fstats else None
-            files = {new_dir: new_files}
-            frows = {new_dir: new_rows} if new_rows else None
-            blooms = {new_dir: new_blooms} if new_blooms else None
-            partial_dirs = None
-            blob = {}
-            schema_json = json.loads(survivors.schema.json())
-            hetero = False
-        if pred_json is not None:
-            blob["predicate"] = pred_json
-        elif rule_pred_json is not None:
-            # exact skip-grammar rendering of the rule — the streaming
-            # source replays it with pyarrow, no change rows needed
-            blob["predicate"] = rule_pred_json
-        if rule_doc is not None:
-            # replayable rule recipe: the change feed recompiles it over
-            # the previous snapshot to reconstruct the deleted rows
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
+        change_dir, written = _rewrite(
+            att, touched, survivors, deleted, cache=need_changes
+        )
+        blob = _rewrite_shape(part, manifest) if part else {}
+        blob.update(region.recipe())
         if need_changes and not change_feed:
-            # forced materialization: the rule is not expressible in the
-            # skip grammar, so its deletions were recorded as rows
             blob["materialized_changes"] = "rule_not_skip_expressible"
-        try:
-            return _commit(
-                path,
-                dirs,
-                "delete",
-                expected,
-                stats,
-                None,
-                fstats,
-                files,
-                schema=schema_json,
-                heterogeneous=hetero,
-                changes=change_dir,
-                blooms=blooms,
-                file_rows=frows,
-                partial_dirs=partial_dirs,
-                extra={"delete": blob},
-            )
-        except FileExistsError:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-    raise RuntimeError(f"delete at {path} lost {max_retries} commit races")
+        return att.successor(
+            part, [written], bloom_cols, changes=change_dir,
+            schema=manifest.get("schema")
+            or json.loads(survivors.schema.json()),
+            extra={"delete": blob},
+        )
+
+    return _mutate(spark, path, "delete", attempt, max_retries)
 
 
 def vt_convert(
@@ -5706,8 +5358,10 @@ def vt_replace_where(
     source emit delete(matched) + insert(df) exactly; the table-stream
     reader classifies it as a change commit (skip or fail loudly).
 
-    Concurrency: derived from the head it read — any commit race
-    re-derives against the new head and retries, like DELETE.
+    Pruning, the DV-aware touched read, staging and the retried commit
+    are the mutation kernel's (contract: the comment above
+    :class:`_Region`); replace_where supplies the survivors plus the
+    incoming rows and its ``replace_where`` audit blob.
 
     ``rule=`` (mutually exclusive with ``predicate``, r14 late): the
     engine's rule DOCUMENTS drive the replaced region exactly as they
@@ -5721,48 +5375,12 @@ def vt_replace_where(
     Reference provenance: beyond-reference lakehouse surface
     (SURVEY.md north star), modeled on Delta's documented
     ``option("replaceWhere", …)`` INSERT OVERWRITE contract."""
-    from collections.abc import Mapping as _Mapping
+    from pyspark.sql.types import StructType
 
-    rule_doc = None
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..plans.model import RuleDefinition
+    region = _Region(predicate, rule, external_params, "vt_replace_where")
 
-        if isinstance(rule, _Mapping):
-            rule_doc = dict(rule)
-            rule = RuleDefinition.from_dict(rule)
-        conjuncts = None
-        cond = None
-        pred_json = None
-        try:
-            json.dumps([rule_doc, dict(external_params or {})])
-        except (TypeError, ValueError):
-            rule_doc = None  # non-JSON params: CDC needs change rows
-    else:
-        conjuncts = _normalize_predicate(predicate)
-        if conjuncts is None:
-            raise ValueError(
-                "vt_replace_where requires a predicate or a rule"
-            )
-        cond = None
-        for col, op, value in conjuncts:
-            c = _conjunct_column(col, op, value)
-            cond = c if cond is None else (cond & c)
-        try:
-            json.dumps([[c, o, v] for c, o, v in conjuncts])
-            pred_json: list | None = [
-                [c, o, v] for c, o, v in conjuncts
-            ]
-        except (TypeError, ValueError):
-            pred_json = None  # non-JSON values: must materialize
-
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+    def attempt(att: _Attempt):
+        manifest = att.manifest
         if manifest.get("schema") is None:
             raise ValueError(
                 "vt_replace_where requires a table with a recorded "
@@ -5781,9 +5399,7 @@ def vt_replace_where(
             out_df = _apply_generated(out_df, eff_generated)
             _validate_generated(out_df, eff_generated, supplied_cols)
         # store assignment (same implicit safe cast an append gets)
-        from pyspark.sql.types import StructType as _ST
-
-        base_st = _ST.fromJson(manifest["schema"])
+        base_st = StructType.fromJson(manifest["schema"])
         base_types = {f.name: f.dataType for f in base_st.fields}
         df_types = {f.name: f.dataType for f in out_df.schema.fields}
         upcasts = {
@@ -5809,250 +5425,60 @@ def vt_replace_where(
                 f"{out_df.columns}) — schema evolution is "
                 "vt_write(merge_schema=True)'s"
             )
-        exact = None
-        rule_pred_json = None
-        if rule is not None:
-            from pyspark.sql.types import StructType as _RST
-
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_exact_conjuncts,
-                rule_skip_conjuncts,
-            )
-
-            schema_st = _RST.fromJson(manifest["schema"])
-            loop_conjuncts = (
-                rule_skip_conjuncts(rule, schema_st, external_params)
-                or []
-            )
-            cond = compile_predicate(
-                rule.conditions, schema_st, external_params
-            )
-            exact = rule_exact_conjuncts(
-                rule, schema_st, external_params
-            )
-            if exact is not None:
-                try:
-                    json.dumps([[c, o, v] for c, o, v in exact])
-                    rule_pred_json = [
-                        [c, o, v] for c, o, v in exact
-                    ]
-                except (TypeError, ValueError):
-                    rule_pred_json = None
-        else:
-            loop_conjuncts = conjuncts
-        eff_pred_json = pred_json if rule is None else rule_pred_json
+        region.resolve(spark, path, manifest)
         # a region the manifest cannot replay (non-JSON values, or a
         # rule beyond the skip grammar) materializes its deleted rows —
         # the same stream-replayability line vt_delete draws
-        need_changes = change_feed or eff_pred_json is None
+        need_changes = change_feed or region.recorded is None
+        cond = F.coalesce(region.cond, F.lit(False))
         # Delta's containment contract: every incoming row satisfies
         # the region predicate (a NULL predicate does not satisfy)
-        stray = (
-            out_df.filter(~F.coalesce(cond, F.lit(False)))
-            .limit(1)
-            .count()
-        )
-        if stray:
-            region = conjuncts if rule is None else "the rule"
+        if out_df.filter(~cond).limit(1).count():
+            shown = region.skip if region.rule is None else "the rule"
             raise ValueError(
                 "vt_replace_where: the incoming frame holds rows that "
-                f"do not satisfy {region!r} — replaceWhere only "
+                f"do not satisfy {shown!r} — replaceWhere only "
                 "writes rows inside the region it replaces"
             )
         _enforce_constraints(
             out_df, manifest.get("constraints") or [], recorded=True
         )
-        cmap = _col_mapping(manifest)
-        pconj = _map_conjuncts(loop_conjuncts, cmap)
-        touch = _pred_touch_fn(pconj, _bloom_col_types(manifest))
-        dropper = None
-        dir_dropper = None
-        prove = conjuncts if rule is None else exact
-        if not need_changes and prove:
-            # metadata-only removal (see vt_delete's whole-file fast
-            # path): needs FULL-MATCH proof conjuncts (the predicate
-            # itself, or the rule's exact skip-grammar rendering) and
-            # is disabled when deleted rows must materialize
-            pprove = _map_conjuncts(prove, cmap)
-            _pvals = manifest.get("partitions") or {}
-            if _pvals:
-                def dir_dropper(d, _pv=_pvals, _c=pprove):
-                    pv = _pv.get(d)
-                    return pv is not None and _partition_proves_all(
-                        pv, _c
-                    )
-
-            def dropper(d, entry, nrows, _c=pprove, _pv=_pvals):
-                lc = _c
-                pv = _pv.get(d)
-                if pv:
-                    lc = [
-                        c
-                        for c in lc
-                        if not (
-                            c[0] in pv and _partition_proves_all(pv, [c])
-                        )
-                    ]
-                    if not lc:
-                        return True
-                return _file_fully_matches(lc, entry, nrows)
-
-        part = _partition_snapshot(
-            path, manifest, touch, drop_file=dropper,
-            drop_dir=dir_dropper,
+        part = _region_prune(
+            path, manifest, region.skip,
+            None if need_changes else region.proof,
         )
-        written_dirs: list[str] = []
-
-        def _discard() -> None:
-            for d in written_dirs:
-                shutil.rmtree(
-                    os.path.join(path, d), ignore_errors=True
-                )
-
-        change_dir = None
-        survivor: tuple | None = None
+        written, change_dir = [], None
         if part["touched_paths"]:
-            tplan = {
-                "paths": part["touched_paths"],
-                "schema": manifest["schema"],
-                "schema_heterogeneous": manifest.get(
-                    "schema_heterogeneous", False
-                ),
-            }
-            if cmap:
-                tplan["column_mapping"] = cmap
-            _attach_plan_dv(tplan, path, manifest)
-            touched = _read_plan(spark, tplan)
-            if need_changes:
-                touched.persist()
-            try:
-                if need_changes:
-                    deleted = touched.filter(
-                        F.coalesce(cond, F.lit(False))
-                    ).withColumn("_change_type", F.lit("delete"))
-                    change_dir, _, _, _, _ = _write_data_dir(
-                        deleted, path, prefix="c", mapping=cmap
-                    )
-                    written_dirs.append(change_dir)
-                survivor = _write_data_dir(
-                    touched.filter(~F.coalesce(cond, F.lit(False))),
-                    path,
-                    mapping=cmap,
+            touched = _read_plan(
+                spark, _touched_plan(path, manifest, part["touched_paths"])
+            )
+            deleted = (
+                touched.filter(cond).withColumn(
+                    "_change_type", F.lit("delete")
                 )
-                written_dirs.append(survivor[0])
-            finally:
-                if need_changes:
-                    touched.unpersist()
-        eff_pby = manifest.get("partition_by") or []
-        if eff_pby:
-            _validate_partition_by(out_df, eff_pby)
-            new_written = _write_partitioned_dirs(
-                out_df, path, eff_pby, mapping=cmap
+                if need_changes
+                else None
             )
-        else:
-            new_written = []
-        if not new_written:
-            # plain write — or a zero-row partitioned frame, which
-            # still needs a directory so the successor snapshot keeps
-            # a schema-bearing dir even when everything else dropped
-            d0, s0, fs0, fl0, fr0 = _write_data_dir(
-                out_df, path, mapping=cmap
+            change_dir, survivor = _rewrite(
+                att, touched, touched.filter(~cond), deleted,
+                cache=need_changes,
             )
-            new_written = [(d0, s0, fs0, fl0, fr0, None)]
-        written_dirs.extend(w[0] for w in new_written)
-        new_data_dirs = [w[0] for w in new_written]
-        dirs = list(part["dirs"])
-        stats = dict(part["stats"])
-        fstats = dict(part["file_stats"])
-        files = dict(part["files"])
-        frows = dict(part["file_rows"])
-        blooms = dict(part["blooms"])
-        prev_partitions = manifest.get("partitions") or {}
-        partitions = {
-            d: prev_partitions[d]
-            for d in dirs
-            if d in prev_partitions
-        }
-        if survivor is not None:
-            sdir, sstats, sfstats, sfiles, srows = survivor
-            dirs.append(sdir)
-            if sstats:
-                stats[sdir] = sstats
-            if sfstats:
-                fstats[sdir] = sfstats
-            files[sdir] = sfiles
-            if srows:
-                frows[sdir] = srows
-        for d, dstats, dfstats, dfiles, drows, pvals in new_written:
-            dirs.append(d)
-            if dstats:
-                stats[d] = dstats
-            if dfstats:
-                fstats[d] = dfstats
-            files[d] = dfiles
-            if drows:
-                frows[d] = drows
-            if pvals is not None:
-                partitions[d] = pvals
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        if eff_bloom_cols:
-            harvest = list(new_data_dirs)
-            if survivor is not None:
-                harvest.append(survivor[0])
-            for d in harvest:
-                b = _harvest_blooms(
-                    spark, os.path.join(path, d), eff_bloom_cols,
-                    mapping=cmap,
-                )
-                if b:
-                    blooms[d] = b
-        blob: dict = {
-            "files_total": part["files_total"],
-            "files_rewritten": part["files_rewritten"],
-            "new_dirs": new_data_dirs,
-        }
-        if part["files_dropped"]:
-            blob["files_dropped"] = part["files_dropped"]
-            blob["rows_dropped"] = _logical_rows_dropped(
-                part, manifest
-            )
-        if part["dirs_dropped"]:
-            blob["dirs_dropped"] = part["dirs_dropped"]
-        if eff_pred_json is not None:
-            blob["predicate"] = eff_pred_json
-        if rule_doc is not None:
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
+            written.append(survivor)
+        if manifest.get("partition_by"):
+            _validate_partition_by(out_df, manifest["partition_by"])
+        new = att.write_split(out_df)
+        blob = _rewrite_shape(part, manifest)
+        blob.pop("dirs_rewritten_whole", None)  # not in this verb's blob
+        blob["new_dirs"] = [w[0] for w in new]
+        blob.update(region.recipe())
         if need_changes and not change_feed:
             blob["materialized_changes"] = "region_not_replayable"
-        try:
-            return _commit(
-                path,
-                dirs,
-                "replace_where",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                heterogeneous=manifest.get(
-                    "schema_heterogeneous", False
-                ),
-                changes=change_dir,
-                blooms=blooms or None,
-                file_rows=frows or None,
-                partial_dirs=part["partial_dirs"],
-                partitions=partitions or None,
-                extra={"replace_where": blob},
-            )
-        except FileExistsError:
-            _discard()
-            continue  # lost the race — re-derive against the new head
-    raise RuntimeError(
-        f"replace_where at {path} lost {max_retries} commit races"
-    )
+        return att.successor(
+            part, written + new, bloom_cols, changes=change_dir,
+            extra={"replace_where": blob},
+        )
+
+    return _mutate(spark, path, "replace_where", attempt, max_retries)
 
 
 def vt_update(
@@ -6111,35 +5537,17 @@ def vt_update(
 
     ``bloom_cols=`` harvests Bloom filters for the rewritten (or
     DV-appended post-image) directory — parity with
-    vt_write/vt_merge/vt_optimize/vt_compact, see :func:`vt_delete`."""
+    vt_write/vt_merge/vt_optimize/vt_compact, see :func:`vt_delete`.
+
+    Pruning, the DV-aware touched read, staging and the retried commit
+    are the mutation kernel's (contract: the comment above
+    :class:`_Region`); UPDATE supplies the assignments and its
+    ``update`` audit blob."""
     if mode not in ("rewrite", "dv", "auto"):
         raise ValueError(f"unknown update mode {mode!r}")
-    from collections.abc import Mapping as _Mapping
+    from pyspark.sql.types import StructType
 
-    rule_doc = None
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..plans.model import RuleDefinition
-
-        if isinstance(rule, _Mapping):
-            rule_doc = dict(rule)
-            rule = RuleDefinition.from_dict(rule)
-        conjuncts = None
-        pred_json = None
-        try:
-            json.dumps([rule_doc, dict(external_params or {})])
-        except (TypeError, ValueError):
-            rule_doc = None  # non-JSON params: CDC needs change_feed
-    else:
-        conjuncts = _normalize_predicate(predicate)
-        if conjuncts is None:
-            raise ValueError("vt_update requires a predicate or a rule")
-        try:
-            json.dumps([[c, o, v] for c, o, v in conjuncts])
-            pred_json: list | None = [[c, o, v] for c, o, v in conjuncts]
-        except (TypeError, ValueError):
-            pred_json = None
+    region = _Region(predicate, rule, external_params, "vt_update")
     if not assignments:
         raise ValueError("vt_update requires at least one assignment")
     assigns_json = (
@@ -6147,13 +5555,57 @@ def vt_update(
         if all(isinstance(e, str) for e in assignments.values())
         else None
     )
+    # replayable recipe: vt_read_changes reconstructs both images from
+    # the previous snapshot (the predicate, or the recompiled rule) plus
+    # the recorded assignment expressions
+    recipe: dict = {}
+    if assigns_json is not None and region.pred_json is not None:
+        recipe = {"predicate": region.pred_json, "assignments": assigns_json}
+    elif assigns_json is not None and region.rule_doc is not None:
+        recipe = {
+            "rule": region.rule_doc,
+            "external_params": dict(external_params or {}),
+            "assignments": assigns_json,
+        }
 
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+    def assign(fields, matched=None) -> list:
+        """ONE select against the input row: every assignment sees the
+        pre-update values (simultaneous assignment), cast back to the
+        column's declared type; with ``matched``, only matching rows
+        change."""
+        names = {f.name for f in fields}
+        for c in assignments:
+            if c not in names:
+                raise ValueError(f"assignment to unknown column {c!r}")
+        exprs = {
+            c: (F.expr(e) if isinstance(e, str) else e)
+            for c, e in assignments.items()
+        }
+        cols = []
+        for f in fields:
+            if f.name not in exprs:
+                cols.append(F.col(f.name))
+                continue
+            new = exprs[f.name].cast(f.dataType)
+            if matched is not None:
+                new = F.when(matched, new).otherwise(F.col(f.name))
+            cols.append(new.alias(f.name))
+        return cols
+
+    def check(post, manifest) -> None:
+        # the attempt's head governs: its CHECK constraints, and its
+        # generated columns (an assignment leaving one stale, or
+        # rewriting it inconsistently, must not commit)
+        _enforce_constraints(
+            post, manifest.get("constraints") or [], recorded=True
+        )
+        if manifest.get("generated"):
+            _validate_generated(
+                post, manifest["generated"], set(post.columns)
+            )
+
+    def attempt(att: _Attempt):
+        manifest = att.manifest
         bad_ident = sorted(
             set(assignments) & set(manifest.get("identity") or {})
         )
@@ -6163,238 +5615,78 @@ def vt_update(
                 "IDENTITY: vt_update must not SET them (Delta refuses "
                 "explicit identity values in all DML)"
             )
-        if rule is not None:
-            from pyspark.sql.types import StructType
-
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_skip_conjuncts,
-            )
-
-            if manifest.get("schema") is not None:
-                schema_st = StructType.fromJson(manifest["schema"])
-            else:
-                schema_st = spark.read.parquet(
-                    os.path.join(path, manifest["dirs"][0])
-                ).schema
-            loop_conjuncts = (
-                rule_skip_conjuncts(rule, schema_st, external_params) or []
-            )
-            cond = compile_predicate(
-                rule.conditions, schema_st, external_params
-            )
-        else:
-            loop_conjuncts = conjuncts
-            cond = None
-            for col, op, value in conjuncts:
-                c = _conjunct_column(col, op, value)
-                cond = c if cond is None else (cond & c)
-        matched = F.coalesce(cond, F.lit(False))
-        cmap = _col_mapping(manifest)
-        touch = _pred_touch_fn(
-            _map_conjuncts(loop_conjuncts, cmap),
-            _bloom_col_types(manifest),
-        )
+        region.resolve(spark, path, manifest)
+        matched = F.coalesce(region.cond, F.lit(False))
         if manifest.get("schema") is None:
-            if mode == "dv":
-                raise ValueError(
-                    "mode='dv' requires a table with a recorded schema "
-                    "(legacy tables rewrite whole snapshots)"
-                )
-            part = None
-            touched = vt_read(spark, path, expected)
-            schema_json = None
+            part, touched = None, _legacy_snapshot(spark, att, mode)
         else:
-            part = _partition_snapshot(path, manifest, touch)
+            part = _region_prune(path, manifest, region.skip)
             if not part["touched_paths"]:
-                return expected  # provably nothing to update — no-op
-            tplan = {
-                "paths": part["touched_paths"],
-                "schema": manifest["schema"],
-                "schema_heterogeneous": manifest.get(
-                    "schema_heterogeneous", False
-                ),
-            }
-            if cmap:
-                tplan["column_mapping"] = cmap
-            # honor existing deletion vectors (see vt_delete)
-            _attach_plan_dv(tplan, path, manifest)
-            if mode in ("dv", "auto"):
-                res = _dv_update_attempt(
-                    spark,
-                    path,
-                    manifest,
-                    expected,
-                    tplan,
-                    matched,
-                    assignments,
-                    part,
-                    pred_json,
-                    rule_doc,
-                    external_params,
-                    assigns_json,
-                    dv_max_rows,
-                    strict=(mode == "dv"),
-                    bloom_cols=bloom_cols,
+                return att.expected  # provably nothing to update — no-op
+            tplan = _touched_plan(path, manifest, part["touched_paths"])
+            if mode != "rewrite":
+                fields = StructType.fromJson(manifest["schema"]).fields
+                post_cols = assign(fields)
+                m = _read_plan(spark, tplan, keep_positions=True).filter(
+                    matched
                 )
-                if res is not None:
-                    if res >= 0:
-                        return res
-                    continue  # lost the commit race — retry on new head
+                post = m.select(*post_cols)
+                check(post, manifest)
+                pre = m.select(*[F.col(f.name) for f in fields])
+                staged = _dv_stage(
+                    att, m,
+                    pre.withColumn(
+                        "_change_type", F.lit("update_preimage")
+                    ).unionByName(post.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )),
+                    {"files_total": part["files_total"], **recipe},
+                    dv_max_rows, mode == "dv", bloom_cols, new_data=post,
+                )
+                if staged is not None:
+                    return staged
                 # mode="auto" over dv_max_rows: copy-on-write this attempt
             touched = _read_plan(spark, tplan)
-            schema_json = manifest["schema"]
-            if manifest.get("dv"):
-                # same phantom-match exit as vt_delete: physical stats
-                # can classify files as touched when the only matching
-                # rows are already DV-hidden — probe before rewriting
-                if touched.filter(matched).limit(1).count() == 0:
-                    return expected
-        fields = touched.schema.fields
-        names = {f.name for f in fields}
-        for c in assignments:
-            if c not in names:
-                raise ValueError(f"assignment to unknown column {c!r}")
-        exprs = {
-            c: (F.expr(e) if isinstance(e, str) else e)
-            for c, e in assignments.items()
-        }
-        # ONE select against the input row: every assignment sees the
-        # pre-update values (simultaneous assignment), cast back to the
-        # column's declared type. The match decision is computed ONCE on
-        # the PRE-update row and carried as a flag — re-evaluating the
-        # predicate against ``updated`` would be wrong whenever an
-        # assignment rewrites a predicate column (``SET amount = amount
-        # * 10 WHERE amount = 2``: the post-image no longer matches, so
-        # a post-filter would lose its change rows AND skip constraint
-        # enforcement for exactly the rows that changed).
+            # the phantom-match exit of vt_delete: physical stats can
+            # touch files whose only matching rows are DV-hidden
+            if manifest.get("dv") and touched.filter(matched).limit(1).count() == 0:
+                return att.expected
+        # the match is decided ONCE on the PRE-update row and carried as
+        # a flag: re-evaluating it on the post-image would lose the rows
+        # whose assignment rewrites a predicate column (``SET amount =
+        # amount * 10 WHERE amount = 2``) from the change rows and the
+        # constraint check
         updated_all = touched.select(
-            *[
-                F.when(matched, exprs[f.name].cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in exprs
-                else F.col(f.name)
-                for f in fields
-            ],
+            *assign(touched.schema.fields, matched),
             matched.alias("_vt_matched"),
         )
         updated = updated_all.drop("_vt_matched")
         post_rows = updated_all.filter("_vt_matched").drop("_vt_matched")
+        changes = None
         # three+ consumers of the touched files (constraint check,
-        # pre/post change rows, snapshot rewrite): one scan, released
-        # in finally
+        # change rows, snapshot rewrite): one scan
         touched.persist()
-        change_dir = None
         try:
-            _enforce_constraints(
-                post_rows, vt_constraints(path), recorded=True
-            )
-            gen_specs = manifest.get("generated") or {}
-            if gen_specs:
-                # an assignment that leaves a generated column stale
-                # (or rewrites it inconsistently) must not commit
-                _validate_generated(
-                    post_rows, gen_specs, set(post_rows.columns)
-                )
+            check(post_rows, manifest)
             if change_feed:
-                pre = touched.filter(matched).withColumn(
+                changes = touched.filter(matched).withColumn(
                     "_change_type", F.lit("update_preimage")
-                )
-                post = post_rows.withColumn(
+                ).unionByName(post_rows.withColumn(
                     "_change_type", F.lit("update_postimage")
-                )
-                change_dir, _, _, _, _ = _write_data_dir(
-                    pre.unionByName(post), path, prefix="c", mapping=cmap
-                )
-            new_dir, new_stats, new_fstats, new_files, new_rows = (
-                _write_data_dir(updated, path, mapping=cmap)
-            )
+                ))
+            change_dir, written = _rewrite(att, touched, updated, changes)
         finally:
             touched.unpersist()
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
+        blob = _rewrite_shape(part, manifest) if part else {}
+        blob.update(recipe)
+        return att.successor(
+            part, [written], bloom_cols, changes=change_dir,
+            schema=manifest.get("schema")
+            or json.loads(updated.schema.json()),
+            extra={"update": blob},
         )
-        if part is not None:
-            dirs = part["dirs"] + [new_dir]
-            stats = {
-                **part["stats"],
-                **({new_dir: new_stats} if new_stats else {}),
-            }
-            fstats = {
-                **part["file_stats"],
-                **({new_dir: new_fstats} if new_fstats else {}),
-            }
-            files = {**part["files"], new_dir: new_files}
-            frows = {
-                **part["file_rows"],
-                **({new_dir: new_rows} if new_rows else {}),
-            }
-            blooms = dict(part["blooms"])
-            if new_blooms:
-                blooms[new_dir] = new_blooms
-            blooms = blooms or None
-            partial_dirs = part["partial_dirs"]
-            blob = {
-                "files_total": part["files_total"],
-                "files_rewritten": part["files_rewritten"],
-            }
-            if part["dirs_rewritten_whole"]:
-                blob["dirs_rewritten_whole"] = part["dirs_rewritten_whole"]
-            hetero = manifest.get("schema_heterogeneous", False)
-        else:
-            dirs = [new_dir]
-            stats = {new_dir: new_stats} if new_stats else {}
-            fstats = {new_dir: new_fstats} if new_fstats else None
-            files = {new_dir: new_files}
-            frows = {new_dir: new_rows} if new_rows else None
-            blooms = {new_dir: new_blooms} if new_blooms else None
-            partial_dirs = None
-            blob = {}
-            schema_json = json.loads(updated.schema.json())
-            hetero = False
-        if assigns_json is not None and pred_json is not None:
-            # replayable recipe: vt_read_changes reconstructs both
-            # images from the previous snapshot + these expressions
-            blob["predicate"] = pred_json
-            blob["assignments"] = assigns_json
-        elif assigns_json is not None and rule_doc is not None:
-            # rule recipe: the change feed recompiles the rule over the
-            # previous snapshot and re-applies the assignments
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
-            blob["assignments"] = assigns_json
-        try:
-            return _commit(
-                path,
-                dirs,
-                "update",
-                expected,
-                stats,
-                None,
-                fstats,
-                files,
-                schema=schema_json,
-                heterogeneous=hetero,
-                changes=change_dir,
-                blooms=blooms,
-                file_rows=frows,
-                partial_dirs=partial_dirs,
-                extra={"update": blob},
-            )
-        except FileExistsError:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-    raise RuntimeError(f"update at {path} lost {max_retries} commit races")
+
+    return _mutate(spark, path, "update", attempt, max_retries)
 
 
 def vt_history(path: str) -> list[dict]:
@@ -7372,8 +6664,9 @@ def vt_optimize(
     if not head:
         raise FileNotFoundError(f"no committed versions at {path}")
     expected = head[-1]
-    head_manifest = _read_manifest(path, expected)
-    cmap = _col_mapping(head_manifest)
+    att = _Attempt(
+        spark, path, "optimize", expected, _read_manifest(path, expected)
+    )
     snap = vt_read(spark, path, expected)
     # "compact" = bin-packing only (Delta OPTIMIZE without ZORDER): the
     # no-cluster-key maintenance path vt_maintain uses when no one
@@ -7385,52 +6678,19 @@ def vt_optimize(
     # clustered frame is re-split one dir per partition value (still one
     # Spark job), so DROP PARTITION and exact dir pruning survive the
     # rewrite — Delta's OPTIMIZE likewise never crosses partitions
-    recorded_pby = head_manifest.get("partition_by") or []
-    if recorded_pby:
-        written = _write_partitioned_dirs(
-            clustered, path, recorded_pby, mapping=cmap
-        )
-    else:
-        written = []
-    if not written:
-        d0, s0, fs0, fl0, fr0 = _write_data_dir(
-            clustered, path, mapping=cmap
-        )
-        written = [(d0, s0, fs0, fl0, fr0, None)]
-    new_dirs = [w[0] for w in written]
-    eff_bloom_cols = _effective_bloom_cols(bloom_cols, head_manifest)
-    new_blooms_by_dir: dict = {}
-    if eff_bloom_cols:
-        for d in new_dirs:
-            b = _harvest_blooms(
-                spark, os.path.join(path, d), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if b:
-                new_blooms_by_dir[d] = b
+    written = att.write_split(clustered)
     try:
         # the rewrite reconciled every row to the head's logical schema,
         # so the layout is homogeneous again (heterogeneous flag cleared)
         return _commit(
-            path,
-            new_dirs,
-            "optimize",
-            expected,
-            {d: s for d, s, *_ in written if s},
-            None,
-            {d: fs for d, _, fs, *_ in written if fs} or None,
-            {d: fl for d, _, _, fl, *_ in written},
-            schema=json.loads(clustered.schema.json()),
-            blooms=new_blooms_by_dir or None,
-            file_rows={d: fr for d, _, _, _, fr, _ in written if fr}
-            or None,
-            partitions={
-                d: pv for d, _, _, _, _, pv in written if pv is not None
-            },
+            path, op="optimize", expected_head=expected,
+            **att.successor(
+                None, written, bloom_cols,
+                schema=json.loads(clustered.schema.json()),
+            ),
         )
     except FileExistsError:
-        for d in new_dirs:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        att.discard()
         raise
 
 
@@ -7463,106 +6723,41 @@ def _optimize_where(
     clustered ONLY the files whose stats say they MAY hold rows matching
     the conjunction; everything out of scope is referenced verbatim.
     See :func:`vt_optimize` for the contract."""
-    conjuncts = _normalize_predicate(where)
-    pred_json = None
-    try:
-        json.dumps([[c, o, v] for c, o, v in conjuncts])
-        pred_json = [[c, o, v] for c, o, v in conjuncts]
-    except (TypeError, ValueError):
-        pass  # non-JSON values: blob simply omits the predicate
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+    region = _Region(where, None, None, "vt_optimize(where=...)")
+
+    def attempt(att: _Attempt):
+        manifest = att.manifest
         if manifest.get("schema") is None:
             raise ValueError(
                 "vt_optimize(where=...) requires a table with a "
                 "recorded schema (legacy tables rewrite whole snapshots)"
             )
-        cmap = _col_mapping(manifest)
-        touch = _pred_touch_fn(
-            _map_conjuncts(conjuncts, cmap), _bloom_col_types(manifest)
-        )
-        part = _partition_snapshot(path, manifest, touch)
+        part = _region_prune(path, manifest, region.skip)
         if not part["touched_paths"]:
-            return expected  # nothing in scope — no-op
-        tplan = {
-            "paths": part["touched_paths"],
-            "schema": manifest["schema"],
-            "schema_heterogeneous": manifest.get(
-                "schema_heterogeneous", False
-            ),
-        }
-        if cmap:
-            tplan["column_mapping"] = cmap
+            return att.expected  # nothing in scope — no-op
         # the scoped rewrite materializes in-scope files' vectors —
         # the read applies them, and _commit's carry-prune drops their
         # entries with the files they described
-        _attach_plan_dv(tplan, path, manifest)
         clustered = _cluster_frame(
-            spark, _read_plan(spark, tplan), cluster_by, n_partitions,
-            method, zorder_bits,
+            spark,
+            _read_plan(
+                spark, _touched_plan(path, manifest, part["touched_paths"])
+            ),
+            cluster_by, n_partitions, method, zorder_bits,
         )
-        new_dir, new_stats, new_fstats, new_files, new_rows = (
-            _write_data_dir(clustered, path, mapping=cmap)
-        )
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
-        )
-        dirs = part["dirs"] + [new_dir]
-        stats = {
-            **part["stats"],
-            **({new_dir: new_stats} if new_stats else {}),
-        }
-        fstats = {
-            **part["file_stats"],
-            **({new_dir: new_fstats} if new_fstats else {}),
-        }
-        files = {**part["files"], new_dir: new_files}
-        frows = {
-            **part["file_rows"],
-            **({new_dir: new_rows} if new_rows else {}),
-        }
-        blooms = dict(part["blooms"])
-        if new_blooms:
-            blooms[new_dir] = new_blooms
         blob = {
             "scope": "where",
             "files_total": part["files_total"],
             "files_rewritten": part["files_rewritten"],
         }
-        if pred_json is not None:
-            blob["predicate"] = pred_json
-        try:
-            return _commit(
-                path,
-                dirs,
-                "optimize",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                heterogeneous=manifest.get("schema_heterogeneous", False),
-                blooms=blooms or None,
-                file_rows=frows or None,
-                partial_dirs=part["partial_dirs"],
-                extra={"optimize": blob},
-            )
-        except FileExistsError:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-    raise RuntimeError(
-        f"scoped optimize at {path} lost {max_retries} commit races"
-    )
+        if region.pred_json is not None:
+            blob["predicate"] = region.pred_json
+        return att.successor(
+            part, [att.write(clustered)], bloom_cols,
+            extra={"optimize": blob},
+        )
+
+    return _mutate(spark, path, "optimize", attempt, max_retries)
 
 
 def vt_compact(
@@ -7596,12 +6791,8 @@ def vt_compact(
     Compaction is NOT clustering: packed files get whatever footer
     ranges their input rows had. Run :func:`vt_optimize` (range/zorder)
     when per-file min/max tightness — not file count — is the problem."""
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+    def attempt(att: _Attempt):
+        manifest = att.manifest
         if manifest.get("schema") is None:
             raise ValueError(
                 "vt_compact requires a table with a recorded schema — "
@@ -7637,85 +6828,38 @@ def vt_compact(
                     small.add((d, f))
                     small_bytes += sz
         if len(small) + whole_dirs < max(min_files, 2):
-            return expected  # nothing worth packing — no-op
+            return att.expected  # nothing worth packing — no-op
         part = _partition_snapshot(
             path, manifest, None, touch_name=lambda d, f: (d, f) in small
         )
         if not part["touched_paths"]:
-            return expected
-        cmap = _col_mapping(manifest)
-        tplan = {
-            "paths": part["touched_paths"],
-            "schema": manifest["schema"],
-            "schema_heterogeneous": manifest.get(
-                "schema_heterogeneous", False
-            ),
-        }
-        if cmap:
-            tplan["column_mapping"] = cmap
+            return att.expected
         # the packed rows materialize their deletion vectors (kept
         # files keep theirs — _commit's carry-prune drops only the
         # entries whose files left the manifest)
-        _attach_plan_dv(tplan, path, manifest)
-        packed = _read_plan(spark, tplan).repartition(
-            max(1, -(-small_bytes // max(target_file_bytes, 1)))
-        )
-        new_dirs, nstats, nfstats, nfiles, nfrows, nblooms, nparts = (
-            _write_maintenance_output(
-                spark, packed, path, manifest, cmap, bloom_cols
-            )
-        )
-        dirs = part["dirs"] + new_dirs
-        stats = {**part["stats"], **nstats}
-        fstats = {**part["file_stats"], **nfstats}
-        files = {**part["files"], **nfiles}
-        frows = {**part["file_rows"], **nfrows}
-        blooms = {**part["blooms"], **nblooms}
-        # kept partitioned dirs keep their recorded values (carry-prune
-        # in _commit); the repacked dirs add theirs explicitly
-        partitions = {
-            **{
-                d: v
-                for d, v in (manifest.get("partitions") or {}).items()
-                if d in set(part["dirs"])
+        packed = _read_plan(
+            spark, _touched_plan(path, manifest, part["touched_paths"])
+        ).repartition(max(1, -(-small_bytes // max(target_file_bytes, 1))))
+        return att.successor(
+            part, att.write_split(packed, repack=True), bloom_cols,
+            # a compact that kept NO file verbatim reconciled every row
+            # to the head's logical schema — the layout is homogeneous
+            # again, exactly like a full OPTIMIZE
+            heterogeneous=(
+                manifest.get("schema_heterogeneous", False)
+                and bool(part["dirs"])
+            ),
+            extra={
+                "compact": {
+                    "files_total": part["files_total"],
+                    "files_compacted": part["files_rewritten"],
+                    "dirs_compacted_whole": part["dirs_rewritten_whole"],
+                    "bytes_compacted": small_bytes,
+                }
             },
-            **nparts,
-        }
-        try:
-            return _commit(
-                path,
-                dirs,
-                "optimize",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                # a compact that kept NO file verbatim reconciled every
-                # row to the head's logical schema — the layout is
-                # homogeneous again, exactly like a full OPTIMIZE
-                heterogeneous=(
-                    manifest.get("schema_heterogeneous", False)
-                    and bool(part["dirs"])
-                ),
-                blooms=blooms or None,
-                file_rows=frows or None,
-                partial_dirs=part["partial_dirs"],
-                extra={
-                    "compact": {
-                        "files_total": part["files_total"],
-                        "files_compacted": part["files_rewritten"],
-                        "dirs_compacted_whole": part["dirs_rewritten_whole"],
-                        "bytes_compacted": small_bytes,
-                    }
-                },
-                partitions=partitions,
-            )
-        except FileExistsError:
-            for d in new_dirs:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    raise RuntimeError(f"compact at {path} lost {max_retries} commit races")
+        )
+
+    return _mutate(spark, path, "optimize", attempt, max_retries)
 
 
 def vt_reorg(
@@ -7755,15 +6899,11 @@ def vt_reorg(
     ``dv_rows_purged``. Returns the new version, or the current head
     when no file crosses the threshold. Requires a recorded schema
     (legacy tables have no DVs by construction)."""
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+    def attempt(att: _Attempt):
+        manifest = att.manifest
         dv_map = manifest.get("dv") or {}
         if not dv_map:
-            return expected  # nothing vectored — no-op
+            return att.expected  # nothing vectored — no-op
         if manifest.get("schema") is None:  # pragma: no cover - legacy
             raise ValueError(
                 "vt_reorg requires a table with a recorded schema"
@@ -7784,84 +6924,37 @@ def vt_reorg(
                     dirty.add((d, fname))
                     purged_rows += count
         if not dirty:
-            return expected  # all vectors below threshold — no-op
+            return att.expected  # all vectors below threshold — no-op
         part = _partition_snapshot(
             path, manifest, None, touch_name=lambda d, f: (d, f) in dirty
         )
         if not part["touched_paths"]:  # pragma: no cover - defensive
-            return expected
+            return att.expected
         touched_bytes = 0
         for p in part["touched_paths"]:
             try:
                 touched_bytes += os.path.getsize(p)
             except OSError:
                 continue
-        cmap = _col_mapping(manifest)
-        tplan = {
-            "paths": part["touched_paths"],
-            "schema": manifest["schema"],
-            "schema_heterogeneous": manifest.get(
-                "schema_heterogeneous", False
-            ),
-        }
-        if cmap:
-            tplan["column_mapping"] = cmap
-        # the purging read applies the vectors — that IS the purge
-        _attach_plan_dv(tplan, path, manifest)
-        purged = _read_plan(spark, tplan).repartition(
-            max(1, -(-touched_bytes // max(target_file_bytes, 1)))
-        )
-        new_dirs, nstats, nfstats, nfiles, nfrows, nblooms, nparts = (
-            _write_maintenance_output(
-                spark, purged, path, manifest, cmap, bloom_cols
-            )
-        )
-        dirs = part["dirs"] + new_dirs
-        stats = {**part["stats"], **nstats}
-        fstats = {**part["file_stats"], **nfstats}
-        files = {**part["files"], **nfiles}
-        frows_out = {**part["file_rows"], **nfrows}
-        blooms = {**part["blooms"], **nblooms}
-        partitions = {
-            **{
-                d: v
-                for d, v in (manifest.get("partitions") or {}).items()
-                if d in set(part["dirs"])
+        # the purging read applies the vectors — that IS the purge; the
+        # successor's dv carry (pruned to still-referenced files) drops
+        # the purged files' entries and keeps sub-threshold ones verbatim
+        purged = _read_plan(
+            spark, _touched_plan(path, manifest, part["touched_paths"])
+        ).repartition(max(1, -(-touched_bytes // max(target_file_bytes, 1))))
+        return att.successor(
+            part, att.write_split(purged, repack=True), bloom_cols,
+            extra={
+                "reorg": {
+                    "files_total": part["files_total"],
+                    "files_rewritten": part["files_rewritten"],
+                    "dv_files_purged": len(dirty),
+                    "dv_rows_purged": purged_rows,
+                }
             },
-            **nparts,
-        }
-        try:
-            # dv=None carries the head's map pruned to still-referenced
-            # files: purged files left the manifest, so their entries
-            # drop; sub-threshold files keep theirs verbatim
-            return _commit(
-                path,
-                dirs,
-                "optimize",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                heterogeneous=manifest.get("schema_heterogeneous", False),
-                blooms=blooms or None,
-                file_rows=frows_out or None,
-                partial_dirs=part["partial_dirs"],
-                extra={
-                    "reorg": {
-                        "files_total": part["files_total"],
-                        "files_rewritten": part["files_rewritten"],
-                        "dv_files_purged": len(dirty),
-                        "dv_rows_purged": purged_rows,
-                    }
-                },
-                partitions=partitions,
-            )
-        except FileExistsError:
-            for d in new_dirs:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    raise RuntimeError(f"reorg at {path} lost {max_retries} commit races")
+        )
+
+    return _mutate(spark, path, "optimize", attempt, max_retries)
 
 
 def vt_vacuum(

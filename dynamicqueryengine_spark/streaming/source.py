@@ -64,6 +64,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+from pyspark.errors import PySparkException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -822,8 +823,16 @@ def vt_change_stream(
         # sequential re-register silently overwrites, but two driver
         # threads registering at once can trip the JVM manager's
         # exists-check — the source being registered IS the desired
-        # state, so the race loser proceeds
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
+        # state, so the race loser proceeds. Matched on the error
+        # condition; the message text is only a fallback for errors
+        # that carry none.
+        condition = (
+            exc.getCondition() if isinstance(exc, PySparkException) else None
+        )
+        if condition is not None:
+            if condition != "DATA_SOURCE_ALREADY_EXISTS":
+                raise
+        elif "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
             raise
     reader = (
         spark.readStream.format(CHANGE_SOURCE_NAME)

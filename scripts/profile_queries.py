@@ -1,13 +1,15 @@
 #!/usr/bin/env python
-"""Round-15 optimization harness: time a SUBSET of declared queries with
-bench.py's exact protocol (scrub + .count(), min over passes), count the
-Spark JOBS each query runs (the §1.2 job-count audit the r14 verdict asks
-to repeat), and/or dump `.explain("formatted")` to plans/r15/. Usage::
+"""Time a subset of the declared queries with bench.py's protocol (scrub,
+then ``.count()``, min over passes), count the Spark jobs each query
+runs, and optionally dump each query's ``.explain("formatted")`` plan to
+``plans/profile/<query>_<tag>.txt``. Usage::
 
-    python scripts/profile_r15.py q1 q2 ...            # time (3 passes)
-    PROFILE_PASSES=5 python scripts/profile_r15.py q1
-    PROFILE_PLANS=before python scripts/profile_r15.py q1   # also dump plan
+    python scripts/profile_queries.py q1 q2 ...              # time (3 passes)
+    PROFILE_PASSES=5 python scripts/profile_queries.py q1
+    PROFILE_PLANS=before python scripts/profile_queries.py q1   # also dump plans
     PROFILE_SF_DIR=/root/testdata/sf0.1 (default)
+
+Prints one JSON object: ``{query: {"min", "runs", "jobs"}}``.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ def main() -> None:
     names = sys.argv[1:]
 
     spark = get_spark(
-        "dqe-profile-r15",
+        "dqe-profile",
         cpus=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
@@ -57,7 +59,7 @@ def main() -> None:
 
     if plans_tag:
         here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        pdir = os.path.join(here, "plans", "r15")
+        pdir = os.path.join(here, "plans", "profile")
         os.makedirs(pdir, exist_ok=True)
         for name in names:
             df = queries[name](spark, sf_dir)

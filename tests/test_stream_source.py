@@ -945,3 +945,48 @@ class TestFormatStreamRead:
                 reader = reader.option(k, v)
             with pytest.raises(Exception, match="batch"):
                 _drain_to_memory(reader.load())
+
+
+class TestRegistrationRace:
+    """vt_change_stream registers its data source on every call; a
+    concurrent registration that loses the JVM's exists-check is the
+    desired state, matched on the error condition, not the message."""
+
+    @staticmethod
+    def _raising(spark, monkeypatch, condition, message):
+        from pyspark.errors import AnalysisException
+
+        class Raced(AnalysisException):
+            def getCondition(self):
+                return condition
+
+        def register(self, source):
+            raise Raced(message=message)
+
+        monkeypatch.setattr(type(spark.dataSource), "register", register)
+
+    def test_already_exists_condition_is_swallowed(
+        self, spark, tmp_path, monkeypatch
+    ):
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 2))
+        vt_change_stream(spark, path)  # the race winner's registration
+        # the message does not name the condition: only the class matches
+        self._raising(
+            spark, monkeypatch, "DATA_SOURCE_ALREADY_EXISTS",
+            "data source 'vt_changes' already exists",
+        )
+        stream = vt_change_stream(spark, path)
+        assert stream.isStreaming
+
+    def test_other_condition_propagates(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 2))
+        # a different condition propagates even when the message text
+        # mentions the benign one
+        self._raising(
+            spark, monkeypatch, "DATA_SOURCE_NOT_FOUND",
+            "not DATA_SOURCE_ALREADY_EXISTS: the source is missing",
+        )
+        with pytest.raises(Exception, match="the source is missing"):
+            vt_change_stream(spark, path)

@@ -13,6 +13,14 @@ Two layers:
   contract at ``POST /rules/evaluate`` (no web framework in the container;
   the facade is deliberately thin — all real work is the engine pipeline).
 
+The request rows become a DataFrame through
+:func:`~.sources.registry.inline_table`, which ships them to the JVM as one
+Arrow table: the plan reads a ``LocalTableScan``, not a Python RDD, so a
+request runs without starting Python workers. Catalyst folds a filter over
+a local relation into a new local relation while optimizing, so a filter
+rule runs no Spark job at all; group-by rules run their aggregate as small
+jobs over the local rows.
+
 Inline-payload scale note: this path exists for reference parity and
 small interactive calls. Large datasets should flow through the table
 registry (Parquet scans with pushdown), not the request body — same as the
@@ -82,12 +90,14 @@ def explain_request(
     against the inline rows and return Catalyst's optimized + physical
     plans — the introspection surface a rule author uses to confirm the
     predicate folded/pushed the way SCALE.md promises (the engine analog
-    of ``EXPLAIN``). Same 400 {Error} envelope as evaluate."""
+    of ``EXPLAIN``). Catalyst's local-relation fold is off while planning:
+    it would run the rule over the rows. Same 400 {Error} envelope as
+    evaluate."""
     try:
         rows = _ci_get(payload, "Users", "Rows")
         if not rows:
             raise ValueError("Request must include a non-empty 'Users' row list.")
-        df = inline_table(spark, rows)
+        df = inline_table(_planning_session(spark), rows)
         rule_raw = _ci_get(payload, "Rule")
         if rule_raw is None:
             raise ValueError("Request must include 'Rule'.")
@@ -105,6 +115,22 @@ def explain_request(
         }
     except Exception as exc:
         return {"status": 400, "Error": str(exc)}
+
+
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_LOCAL_FOLD = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+
+
+def _planning_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` (same conf, catalog and views) with Catalyst's
+    local-relation fold excluded. That rule evaluates a Filter or Project
+    over the inline rows while optimizing, which is executing the rule;
+    explain shows the rule's plan instead. The shared session's conf is
+    never touched, so concurrent evaluates keep the fold."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    excluded = clone.conf.get(_EXCLUDED_RULES, None)
+    clone.conf.set(_EXCLUDED_RULES, ",".join(filter(None, [excluded, _LOCAL_FOLD])))
+    return clone
 
 
 # Self-description payload — the engine's analog of the reference's

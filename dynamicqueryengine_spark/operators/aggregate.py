@@ -16,15 +16,20 @@ Reference semantics (SURVEY.md §2.3):
   (ConvertToDecimal, AggregationEngine.cs:75-87) — replicated via a
   decimal(38,10) cast.
 
-Scale design: the default argmin/argmax path is ``min_by``/``max_by`` over a
-struct ordering key — a single-pass partial+final hash aggregation (map-side
-combine, one shuffle of one row per group per partition). This is strictly
-better at 100 TB than the window-function formulation (full shuffle + per-
-partition sort of EVERY row). The ordering struct appends tie-breaker columns
-so results are deterministic (LINQ ``OrderBy(...).First()`` is a stable sort —
-ties resolve to first input row; distributed input has no order, so we define
-ties by the full column tuple and mirror the same ORDER BY in the DuckDB
-oracle). A window-based variant is kept for differential testing.
+Scale design: the default argmin/argmax path is ``min``/``max`` over one
+struct whose leading fields are the ordering key — a partial+final
+aggregation with map-side combine, so the shuffle carries one row per group
+per partition. Spark cannot hash-aggregate ``min``/``max`` over a struct
+(the buffer is not a fixed-width mutable value), so the physical plan is
+``SortAggregate`` with a ``Sort`` by the group keys on both sides of the
+exchange: every input row is sorted once, locally, before the shuffle. The
+window-function formulation shuffles EVERY row and then sorts it, so the
+aggregate still moves far less data. The ordering struct appends
+tie-breaker columns so results are deterministic (LINQ
+``OrderBy(...).First()`` is a stable sort — ties resolve to first input row;
+distributed input has no order, so we define ties by the full column tuple
+and mirror the same ORDER BY in the DuckDB oracle). A window-based variant
+is kept for differential testing.
 """
 
 from __future__ import annotations

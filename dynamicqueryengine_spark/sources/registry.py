@@ -4,8 +4,9 @@ The reference has no storage layer at all — rows arrive inline in the HTTP
 body (RuleController.cs:31-35) or as in-process collections
 (RuleDefinitionExecutor.cs:8-13). The Spark-native equivalent of "one request
 = one dataset + one rule" is "registered table + rule document", with
-``spark.createDataFrame`` covering the inline-payload path (see
-``inline_table``).
+``inline_table`` covering the inline-payload path: the payload reaches the
+JVM as one Arrow table and plans as a ``LocalTableScan``, so a request never
+starts Python workers (see ``inline_table``).
 
 Scale notes: tables load lazily via ``spark.read.parquet`` — scans stay
 declarative so Catalyst pushes filters/column pruning into the Parquet
@@ -15,10 +16,22 @@ driver-side caching).
 
 from __future__ import annotations
 
+import decimal
 import os
-from typing import Any, Iterable, Mapping
+from typing import Any, Callable, Iterable, Mapping, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DecimalType,
+    MapType,
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+)
 
 # The driver's synthetic star schema (TESTDATA.md).
 DEFAULT_TABLES = (
@@ -105,8 +118,120 @@ def inline_table(
     schema: Any = None,
 ) -> DataFrame:
     """Inline row payloads (the reference's HTTP-body ``List<User>`` path,
-    RuleController.cs:31-35) → DataFrame."""
-    return spark.createDataFrame(list(rows), schema=schema)
+    RuleController.cs:31-35) → DataFrame over a local relation.
+
+    ``spark.createDataFrame(list_of_dicts)`` plans as ``Scan ExistingRDD``:
+    the rows are pickled into a Python RDD, so every request starts Python
+    workers to unpickle a few hundred rows. Here the rows reach the JVM as
+    one Arrow table instead, which plans as a ``LocalTableScan`` and runs
+    without Python workers.
+
+    The result is the one ``createDataFrame(list(rows), schema)`` gives:
+
+    * the schema is inferred by the same ``_inferSchemaFromList`` (dict
+      keys sorted, strings mixed with other scalars typed string, the same
+      ``CANNOT_MERGE_TYPE`` / ``CANNOT_DETERMINE_TYPE`` errors), and a
+      list of names renames the inferred fields in order; an explicit
+      ``StructType``, DDL string or atomic type (one column ``value``) is
+      checked row by row with the same type verifier;
+    * the Arrow columns are built from the values ``struct.toInternal``
+      produces after the same ``_create_converter`` — the ones the list
+      path pickles — so a non-string in a string column becomes its
+      ``str`` (bools lower-cased), timestamps are UTC micros whatever the
+      input's tz, dates are epoch days, and decimals round half-up to the
+      column's scale as the JVM rounds them.
+
+    A value its column type cannot hold (an int beyond 64 bits, a decimal
+    beyond its precision) raises ``ValueError`` naming the column; the
+    list path turned the int into a silent NULL.
+    """
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    if isinstance(schema, DataType) and not isinstance(schema, StructType):
+        rows = [(value,) for value in rows]
+        schema = StructType().add("value", schema)
+    if schema is None or isinstance(schema, (list, tuple)):
+        struct = spark._inferSchemaFromList(rows, names=schema)
+        # dict rows are read by the inferred names; rename afterwards
+        to_tuple = _create_converter(struct)
+        for i, name in enumerate(schema or ()):
+            struct.fields[i].name = struct.names[i] = name
+    elif isinstance(schema, StructType):
+        struct = schema
+        verify = _make_type_verifier(struct)
+        for row in rows:
+            verify(row)
+        to_tuple = _create_converter(struct)
+    else:
+        raise TypeError(
+            "inline_table schema must be a DataType, a DDL string or a list "
+            f"of names, got {schema!r}"
+        )
+    if not struct.fields:
+        # rows of empty dicts: a column-less Arrow batch loses its row
+        # count on the way to the JVM, so count the rows out directly
+        return spark.range(len(rows)).select()
+    internal = [struct.toInternal(to_tuple(row)) for row in rows]
+    arrow_schema = to_arrow_schema(
+        struct, error_on_duplicated_field_names_in_struct=True
+    )
+    arrays = []
+    for i, (field, arrow_field) in enumerate(zip(struct.fields, arrow_schema)):
+        values = [row[i] for row in internal]
+        adapt = _arrow_value(field.dataType)
+        try:
+            if adapt is not None:
+                values = [adapt(v) for v in values]
+            arrays.append(pa.array(values, type=arrow_field.type))
+        except (OverflowError, pa.ArrowInvalid, decimal.InvalidOperation) as exc:
+            raise ValueError(
+                f"Column '{field.name}' holds a value that does not fit "
+                f"{field.dataType.simpleString()}: {exc}"
+            ) from exc
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
+
+
+def _arrow_value(dt: DataType) -> Optional[Callable[[Any], Any]]:
+    """Per-value adapter from ``toInternal`` output to what Arrow accepts,
+    or ``None`` when the values pass through unchanged. Only decimals need
+    one: the JVM rounds a Python ``Decimal`` half-up to the column scale,
+    where Arrow refuses any value that would lose digits."""
+    if isinstance(dt, DecimalType):
+        quantum = decimal.Decimal(1).scaleb(-dt.scale)
+        ctx = decimal.Context(prec=dt.precision, traps=[decimal.InvalidOperation])
+
+        def adapt_decimal(v: Any) -> Any:
+            if v is None:
+                return None
+            return v.quantize(quantum, rounding=decimal.ROUND_HALF_UP, context=ctx)
+
+        return adapt_decimal
+    if isinstance(dt, ArrayType):
+        elem = _arrow_value(dt.elementType)
+        if elem is None:
+            return None
+        return lambda v: None if v is None else [elem(x) for x in v]
+    if isinstance(dt, MapType):
+        key, val = _arrow_value(dt.keyType), _arrow_value(dt.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or _same, val or _same
+        return lambda v: None if v is None else {key(k): val(x) for k, x in v.items()}
+    if isinstance(dt, StructType):
+        adapters = [_arrow_value(f.dataType) for f in dt.fields]
+        if all(a is None for a in adapters):
+            return None
+        adapters = [a or _same for a in adapters]
+        return lambda v: None if v is None else tuple(
+            a(x) for a, x in zip(adapters, v)
+        )
+    return None
+
+
+def _same(v: Any) -> Any:
+    return v
 
 
 _FORMATS = ("parquet", "csv", "json", "orc")

@@ -813,7 +813,9 @@ def _customer_ltv_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("_ndis")
     ).collect()[0]["_ndis"]
     approx_ok = bool(checks_row["approx_ok"])
-    disagree_ok = bool(ndis <= checks_row["_budget"])
+    # both sums are NULL over an empty orders table, where no customer
+    # can disagree
+    disagree_ok = bool((ndis or 0) <= (checks_row["_budget"] or 0))
     report = tiled.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum("n_orders").alias("n_orders"),

@@ -91,3 +91,15 @@ class TestRfmSegmentsApprox:
             (r["segment"], r["n_customers"], r["segment_value"]) for r in arows
         }
         assert trimmed == _rows(exact)
+
+
+def test_ltv_deciles_approx_on_empty_orders(spark, tmp_path):
+    """Over an empty orders table every audit sum is NULL; the query
+    returns no deciles, as its oracle SQL does, instead of comparing
+    NULL with NULL in Python."""
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(f"{SF_DIR}/orders.parquet")
+    pq.write_table(schema.empty_table(), str(tmp_path / "orders.parquet"))
+    qs = entry_mod.queries()
+    assert qs["window_customer_ltv_deciles_approx"](spark, str(tmp_path)).collect() == []

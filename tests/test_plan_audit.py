@@ -684,3 +684,32 @@ class TestDeletionVectorPlan:
         plan = _physical(vt_read(spark, path))
         assert plan.count("BroadcastHashJoin") == 1
         assert "Union" in plan
+
+
+class TestArgExtremePlan:
+    @pytest.mark.parametrize("prop", ["Score", "NationalIdNumber"])
+    def test_struct_min_max_is_sort_aggregate(self, spark, users_df, prop):
+        """argmin/argmax is ``min``/``max`` over a struct, which Spark
+        cannot hash-aggregate: the plan is a partial + final
+        SortAggregate, each fed by a Sort on the group key, with the
+        exchange between them (operators/aggregate.py docstring). Both
+        struct shapes are pinned: a numeric ordering column, and a
+        string one ordered through its decimal cast."""
+        from pyspark.sql import functions as F
+
+        from dynamicqueryengine_spark.operators.aggregate import apply_aggregation
+        from dynamicqueryengine_spark.plans.model import (
+            AggregateFunction,
+            AggregationDefinition,
+        )
+
+        df = users_df.withColumn("Score", F.length("LoginName"))
+        agg = AggregationDefinition(
+            aggregate_property=prop, aggregate_function=AggregateFunction.MIN
+        )
+        plan = _physical(apply_aggregation(df, ["CompanyCode"], agg))
+        assert plan.count("SortAggregate") == 2
+        assert "partial_min(struct(" in plan
+        assert "HashAggregate" not in plan
+        assert plan.count("Sort [CompanyCode") == 2
+        assert "Exchange hashpartitioning(CompanyCode" in plan
